@@ -36,15 +36,27 @@ def submit(
     return run_id
 
 
-def _latest_snapshot(mine: DataFrame) -> int | None:
+def _latest_snapshot(
+    spark: SparkSession, checkpoint_path: str, run_id: str
+) -> int | None:
     """The snapshot a run most recently committed under (a run_id may
     be resumed after the input changed; committed_at is the only
     ordering key — snapshot ids are content fingerprints, not
-    monotonic)."""
-    row = mine.orderBy(F.col("committed_at").desc()).select(
-        "snapshot_id"
-    ).first()
-    return None if row is None else row["snapshot_id"]
+    monotonic).  None for an unknown run or a missing checkpoint."""
+    ck = lineage.read_checkpoint(spark, checkpoint_path)
+    if ck is None:
+        return None
+    mine = (
+        ck.filter(F.col("run_id") == run_id)
+        .select("snapshot_id", "committed_at")
+        .collect()
+    )
+    if not mine:
+        return None
+    latest = max(
+        mine, key=lambda r: (r["committed_at"].timestamp(), r["snapshot_id"])
+    )
+    return latest["snapshot_id"]
 
 
 def status(spark: SparkSession, checkpoint_path: str, run_id: str) -> dict:
@@ -56,35 +68,23 @@ def status(spark: SparkSession, checkpoint_path: str, run_id: str) -> dict:
     Per-document extraction errors are DATA (``error_rows``), not a job
     state: an engine whose contract is "error rows, not crashes" must
     not mislabel a completed run over messy input as failed."""
-    try:
-        ck = spark.read.parquet(checkpoint_path)
-    except Exception:
-        return {"run_id": run_id, "state": "unknown", "partitions": 0}
-    mine = ck.filter(F.col("run_id") == run_id)
-    snap = _latest_snapshot(mine)
+    snap = _latest_snapshot(spark, checkpoint_path, run_id)
     if snap is None:
         return {"run_id": run_id, "state": "unknown", "partitions": 0}
-    # read through the canonical view: after a detected commit race the
-    # raw table can hold a loser's shadowed duplicate rows, and raw
-    # sums would double-count rows/error_rows (review finding)
-    from .lineage import canonical_lineage
-
-    snap_rows = canonical_lineage(spark, checkpoint_path, snap)
-    agg = snap_rows.agg(
-        F.countDistinct("pid").alias("committed"),
-        F.max("expected_partitions").alias("expected"),
-        F.sum("row_count").alias("rows"),
-        F.sum("error_count").alias("error_rows"),
-    ).collect()[0]
-    done = agg["expected"] is not None and agg["committed"] >= agg["expected"]
+    # canonical rows only: after a detected commit race the raw table
+    # can hold a loser's shadowed duplicate rows, and raw sums would
+    # double-count rows/error_rows
+    won, expected, complete = lineage.snapshot_state(
+        lineage.snapshot_rows(spark, checkpoint_path, snap)
+    )
     return {
         "run_id": run_id,
-        "state": "done" if done else "partial",
+        "state": "done" if complete else "partial",
         "snapshot_id": snap,
-        "partitions": agg["committed"],
-        "expected_partitions": agg["expected"],
-        "rows": agg["rows"],
-        "error_rows": agg["error_rows"] or 0,
+        "partitions": len(won),
+        "expected_partitions": expected,
+        "rows": sum(r["row_count"] for r in won.values()),
+        "error_rows": sum(r["error_count"] or 0 for r in won.values()),
     }
 
 
@@ -98,17 +98,15 @@ def result(
     committed partitions of the run's latest snapshot.  Raises
     ``ValueError`` for an unknown run id or missing checkpoint (the
     404 analog — one exception type for every not-found case)."""
-    try:
-        ck = spark.read.parquet(checkpoint_path)
-        snap = _latest_snapshot(ck.filter(F.col("run_id") == run_id))
-    except ValueError:
-        raise
-    except Exception as exc:
-        raise ValueError(f"unknown run_id: {run_id} ({exc})") from None
+    snap = _latest_snapshot(spark, checkpoint_path, run_id)
     if snap is None:
         raise ValueError(f"unknown run_id: {run_id}")
     # committed pids of the SNAPSHOT, not just this run's rows — a
     # resumed job's result is the union of every contributing run
-    pids = ck.filter(F.col("snapshot_id") == snap).select("pid").distinct()
+    pids = sorted(
+        {r["pid"] for r in lineage.snapshot_rows(spark, checkpoint_path, snap)}
+    )
     out = spark.read.parquet(lineage.snapshot_output_dir(output_path, snap))
-    return out.join(F.broadcast(pids), "pid", "inner")
+    return out.filter(F.col("pid").isin(pids)).select(
+        "pid", *(c for c in out.columns if c != "pid")
+    )

@@ -328,15 +328,21 @@ def sessionize(
 ) -> DataFrame:
     """Gap-based sessionization: a new session starts when the gap to
     the previous event exceeds *gap_seconds*; session_id = running
-    count of session starts (classic lag + cumulative-sum plan)."""
+    count of session starts (classic lag + cumulative-sum plan).  Gaps
+    are fractional seconds, the same doubles as SQL ``epoch()``:
+    whole-second ``unix_timestamp`` differences would keep a 1800.5 s
+    gap inside a 1800 s session.  A TIMESTAMP_NTZ column (parquet
+    timestamps without a zone) is read in the session time zone, UTC
+    in ``session.build_session``, as ``epoch()`` reads a naive
+    timestamp."""
+
+    def epoch(c):
+        return c.cast("timestamp").cast("double")
+
     w = Window.partitionBy(user_col).orderBy(F.col(ts_col).asc())
     prev = F.lag(ts_col).over(w)
     is_start = F.when(
-        prev.isNull()
-        | (
-            F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev)
-            > gap_seconds
-        ),
+        prev.isNull() | (epoch(F.col(ts_col)) - epoch(prev) > gap_seconds),
         1,
     ).otherwise(0)
     wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)

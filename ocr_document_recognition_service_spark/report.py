@@ -52,9 +52,13 @@ def run_report_html(
     title: str = "extraction run report",
 ) -> str:
     """Render the lineage table (+ optional bench line) as HTML."""
+    from .lineage import read_checkpoint
+
     sections: list[str] = []
     try:
-        ck = spark.read.parquet(checkpoint_path)
+        ck = read_checkpoint(spark, checkpoint_path)
+        if ck is None:
+            raise FileNotFoundError(checkpoint_path)
         rows = [
             r.asDict()
             for r in ck.orderBy(F.col("committed_at").desc(), "pid")

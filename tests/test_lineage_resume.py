@@ -1,5 +1,8 @@
 """Kill-and-resume lineage tests (SURVEY §5.2 item 5, FIXTURES §4)."""
 
+import os
+import shutil
+
 import pytest
 
 from ocr_document_recognition_service_spark import lineage
@@ -7,6 +10,10 @@ from ocr_document_recognition_service_spark import lineage
 pytestmark = pytest.mark.spark
 
 P = 8
+# Spark jobs of one jobs.submit + jobs.status at the default 64
+# partitions on the 400-doc fixture (27 when every checkpoint read was
+# a Spark query)
+JOB_BUDGET = 9
 
 
 def test_snapshot_id_stable_and_content_sensitive(pages_parquet, tmp_path):
@@ -261,3 +268,101 @@ def test_vanished_file_error_classifier():
     # a broken accessor degrades to the message fallback, never raises
     assert not lineage._is_vanished_file_error(BrokenGetter("other failure"))
     assert lineage._is_vanished_file_error(BrokenGetter("FAILED_READ_FILE"))
+
+
+def test_submit_and_status_spark_job_budget(spark, pages_parquet, tmp_path):
+    """A submit+status at the default 64 partitions starts a bounded
+    number of Spark jobs (27 before the commit path read checkpoints
+    driver-side), and a resubmit of the committed snapshot only reads
+    the checkpoint."""
+    from ocr_document_recognition_service_spark import jobs
+
+    sc = spark.sparkContext
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+
+    def jobs_of(group, fn, *args):
+        sc.setJobGroup(group, group)
+        try:
+            got = fn(*args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), got
+
+    n_submit, rid = jobs_of(
+        "budget-submit", jobs.submit, spark, pages_parquet, out, ck
+    )
+    n_status, st = jobs_of("budget-status", jobs.status, spark, ck, rid)
+    assert st["state"] == "done" and st["rows"] == 400
+    assert st["partitions"] == st["expected_partitions"] > 32
+    assert n_submit + n_status <= JOB_BUDGET, (n_submit, n_status)
+
+    n_resubmit, _ = jobs_of(
+        "budget-resubmit", jobs.submit, spark, pages_parquet, out, ck, rid
+    )
+    assert n_resubmit <= 1
+
+
+def test_mixed_schema_checkpoint(spark, pages_parquet, tmp_path):
+    """Checkpoint files written before ``error_count`` and
+    ``expected_partitions`` existed (and with an int32 ``snapshot_id``
+    when the crc32 fits) sit next to current rows: resume skips their
+    pids and status counts their rows."""
+    from ocr_document_recognition_service_spark import jobs
+
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    snap = lineage.snapshot_id_of(pages_parquet)
+    kw = dict(num_partitions=P, salt_threshold=16 * 1024)
+
+    lineage.run_extraction(
+        spark, pages_parquet, out, ck, "run-old", limit_partitions=2, **kw
+    )
+    current = spark.read.parquet(ck).collect()
+    snap_type = "int" if snap < 2**31 else "long"
+    legacy = spark.createDataFrame(
+        [
+            (r["pid"], r["row_count"], r["output_md5"], r["run_id"], snap,
+             r["committed_at"])
+            for r in current
+        ],
+        f"pid int, row_count long, output_md5 string, run_id string, "
+        f"snapshot_id {snap_type}, committed_at timestamp",
+    )
+    legacy_ck = str(tmp_path / "legacy")
+    legacy.coalesce(1).write.parquet(legacy_ck)
+    shutil.rmtree(ck)
+    os.makedirs(ck)
+    for f in os.listdir(legacy_ck):
+        if f.endswith(".parquet"):
+            shutil.copy(os.path.join(legacy_ck, f), ck)
+    legacy_pids = {r["pid"] for r in current}
+    legacy_rows = sum(r["row_count"] for r in current)
+
+    st = jobs.status(spark, ck, "run-old")
+    assert st["state"] == "partial" and st["partitions"] == 2
+    assert st["rows"] == legacy_rows and st["expected_partitions"] is None
+
+    # resume skips the legacy pids, next to which it writes current rows
+    r = lineage.run_extraction(
+        spark, pages_parquet, out, ck, "run-mid", limit_partitions=3, **kw
+    )
+    assert r["partitions_processed"] == 3
+    mid = {row["pid"] for row in lineage.snapshot_rows(spark, ck, snap)}
+    assert len(mid) == 5 and legacy_pids < mid
+
+    r = lineage.run_extraction(spark, pages_parquet, out, ck, "run-new", **kw)
+    assert r["partitions_processed"] == P - 5
+    assert legacy_rows + sum(
+        row["row_count"] for row in lineage.snapshot_rows(spark, ck, snap)
+        if row["run_id"] != "run-old"
+    ) == 400
+    for rid in ("run-old", "run-mid", "run-new"):
+        st = jobs.status(spark, ck, rid)
+        assert st["state"] == "done", (rid, st)
+        assert st["rows"] == 400 and st["partitions"] == P
+        assert st["expected_partitions"] == P
+    assert jobs.result(spark, out, ck, "run-new").count() == 400
+    # and a resubmit of the now complete snapshot is a no-op
+    r = lineage.run_extraction(
+        spark, pages_parquet, out, ck, "run-again", **kw
+    )
+    assert r["partitions_processed"] == 0

@@ -215,6 +215,51 @@ def test_chunk_ids_two_pass_equals_global_window(spark, docs):
         assert "HashAggregate" in first_op, first_op
 
 
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_sessionize_fractional_gap_matches_duckdb_oracle(
+    spark, tmp_path, ts_type
+):
+    """w6: a 1800.5 s gap exceeds the 1800 s session gap and must open a
+    new session, as the DuckDB oracle's fractional ``epoch()`` gaps say
+    (whole-second ``unix_timestamp`` gaps kept it in the old session)."""
+    import datetime as dt
+
+    duckdb = pytest.importorskip("duckdb")
+    from ocr_document_recognition_service_spark.plans.queries import REGISTRY
+
+    t0 = dt.datetime(2024, 1, 1)
+    gaps = {  # user -> seconds between consecutive events
+        1: [1800.5],  # just over: two sessions
+        2: [1800.0],  # exactly the gap: one session
+        3: [1799.5, 1800.25, 0.5],  # two sessions
+    }
+    rows = []
+    for user, user_gaps in gaps.items():
+        ts = t0
+        rows.append((user, ts))
+        for g in user_gaps:
+            ts = ts + dt.timedelta(seconds=g)
+            rows.append((user, ts))
+    path = str(tmp_path / "events.parquet")
+    events = spark.createDataFrame(rows, f"user_id long, ts {ts_type}")
+    events.write.parquet(path)
+
+    q = REGISTRY["w6_sessionize"]
+    cols = ["user_id", "n_sessions", "n_events"]
+    got = sorted(
+        tuple(r)
+        for r in q.spark(spark, str(tmp_path)).select(*cols).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    want = sorted(
+        con.execute(f"SELECT {', '.join(cols)} FROM ({q.sql})").fetchall()
+    )
+    assert got == want == [(1, 2, 2), (2, 1, 2), (3, 2, 4)]
+
+
 def test_lsh_probe_candidates_bounded_under_skew(spark):
     """A degenerate corpus (every vector identical → ONE bucket per
     table) must not go quadratic: with a bucket cap, per-query fan-out
