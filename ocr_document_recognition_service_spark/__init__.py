@@ -15,7 +15,7 @@ Package layout
 - ``pdf_extract``  layout-aware PDF block parse (SURVEY §2.4)
 - ``extract_one``  the pure-Python single-document oracle (byte-identical truth)
 - ``gen_pages``    deterministic synthetic Common-Crawl-style corpus
-- ``pipeline``     the Spark pipeline: lang-routed branches, salting, reassembly
+- ``pipeline``     the Spark pipeline: lang-routed branches, in-UDF salting
 - ``lineage``      per-partition lineage/checkpoint + resume protocol
 - ``operators``    dedup / similarity / text-analysis / metrics / window ops
 - ``sources``      table adapters (parquet + Iceberg-emulated snapshot manifest)

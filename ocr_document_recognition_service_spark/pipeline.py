@@ -3,19 +3,15 @@
 Plan shape (all relational work stays in Catalyst; Python only inside
 Arrow-batched pandas UDFs):
 
-    scan pages
-      → repartition(P, xxhash64(url))                 [one shuffle]
-      → skew pre-pass: length(html) > threshold rows split at block
-        boundaries into chunk rows (salt-split, W2 semantics)
+    scan pages (scan partitions, no input-side shuffle)
       → THREE lang-filtered branches (en/ru/kk) + a null-lang branch,
         each applying the vectorized extraction UDF with the branch's
         normalization constants — DataFrame-level routing, no UDF
-        conditional on lang (north rule)
-      → unionByName
-      → drop html immediately (column pruning past extraction)
-      → salted rows reassembled: groupBy(url), texts joined in
-        chunk_id order                                [shuffle only
-        over the tiny salted subset]
+        conditional on lang (north rule); inside the UDF, rows longer
+        than the salt threshold are split at block boundaries,
+        extracted per chunk and rejoined (salt-split, W2 semantics)
+      → unionByName, html dropped immediately (column pruning past
+        extraction)
 
 The per-stage list materialization of the reference
 (``core/pipelines/default/preprocessor.py:9`` etc.) and its
@@ -31,7 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     IntegerType,
     StringType,
@@ -64,8 +59,6 @@ EXTRACT_RESULT_TYPE = StructType(
 DEFAULT_SALT_THRESHOLD = 64 * 1024
 DEFAULT_CHUNK_TARGET = 32 * 1024
 
-_PDF_MAGIC_HEX = "25504446"  # b"%PDF"
-
 
 def _extract_udf(
     lang: str | None,
@@ -91,6 +84,11 @@ def _extract_udf(
 
     @pandas_udf(EXTRACT_RESULT_TYPE)
     def extract(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        from ocr_document_recognition_service_spark.pydeps import (
+            keep_zip_indexes,
+        )
+
+        keep_zip_indexes()
         from ocr_document_recognition_service_spark import extract_one
 
         cap = (
@@ -125,41 +123,20 @@ def _extract_udf(
     return extract
 
 
-@pandas_udf(ArrayType(BinaryType()))
-def _split_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """Salt-split oversized HTML at block boundaries (chunk target is a
-    module constant so the UDF stays single-column; PDF / non-UTF-8
-    payloads come back as a single chunk — the kernel refuses)."""
-    from ocr_document_recognition_service_spark import extract_one
-
-    for payloads in batches:
-        yield payloads.map(
-            lambda p: extract_one.split_html(bytes(p), DEFAULT_CHUNK_TARGET)
-            if p is not None
-            else [None]
-        )
-
-
-def _is_pdf_col(html: "F.Column | None" = None) -> "F.Column":
-    """F5 magic-byte dispatch as a native expression (no UDF)."""
-    h = html if html is not None else F.col("html")
-    return F.hex(F.substring(h, 1, 4)) == F.lit(_PDF_MAGIC_HEX)
-
-
 def extract_pages(
     pages: DataFrame,
     *,
     salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     num_partitions: int | None = None,
     carry_cols: tuple[str, ...] = ("warc_ts",),
-    pre_repartition: bool = False,
     max_payload_bytes: int | None = None,
-    distribute_salted: bool = False,
 ) -> DataFrame:
     """Full extraction plan: returns (url, *carry_cols, lang, text,
     n_blocks, error) with ``lang`` = the language actually used.
 
     ``carry_cols`` pass through untouched (e.g. lineage partition id).
+    ``num_partitions`` is accepted and ignored: extraction reads scan
+    partitions, and callers still pass it.
 
     Shuffle placement (measured, not guessed): extraction reads SCAN
     partitions directly — ``maxPartitionBytes`` already yields even
@@ -169,42 +146,17 @@ def extract_pages(
     that exchange per subtree: profiling showed 3–5× wall cost).  The
     url-hash repartition the lineage contract needs happens AFTER
     extraction, on the narrow text output (``lineage.run_extraction``),
-    where the shuffled bytes are ~10× smaller.  ``pre_repartition=True``
-    restores the input-side shuffle for inputs with pathological file
-    skew.
+    where the shuffled bytes are ~10× smaller.
     """
     from .pydeps import ensure_py_deps
-
-    ensure_py_deps(pages.sparkSession)  # --py-files analog for workers
-    P = int(
-        num_partitions
-        or pages.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    base = pages.select("url", *carry_cols, "lang", "html")
-    if pre_repartition:
-        base = base.repartition(P, F.xxhash64("url"))
-
-    # Skew pre-pass predicate (SURVEY §4 "Skew handling").  Only
-    # known-lang HTML rows are split: PDF ordering is document-global
-    # (L2/L3) and null-lang rows need a whole-document language vote.
-    # coalesce → null lang lands in the unsplit path instead of
-    # vanishing into filter(NULL) on both sides.
     from . import extract_one as _x1
 
+    ensure_py_deps(pages.sparkSession)  # --py-files analog for workers
+    base = pages.select("url", *carry_cols, "lang", "html")
     cap = (
         max_payload_bytes
         if max_payload_bytes is not None
         else _x1.MAX_PAYLOAD_BYTES
-    )
-    splittable = (
-        (F.length("html") > salt_threshold)
-        # rows above the hard cap must NOT take the split branch (the
-        # split UDF would materialize the monster blob); they fall to
-        # the unsplit branch where the kernel emits a PayloadTooLarge
-        # error row instead
-        & (F.length("html") <= cap)
-        & ~_is_pdf_col()
-        & F.coalesce(F.col("lang").isin(*LANGS), F.lit(False))
     )
 
     def _narrow(
@@ -217,98 +169,31 @@ def extract_pages(
         ).select(
             "url",
             *carry_cols,
-            *(["chunk_id"] if "chunk_id" in df.columns else []),
+            F.col("ex.lang_used").alias("lang"),
             F.col("ex.text").alias("text"),
             F.col("ex.n_blocks").alias("n_blocks"),
-            F.col("ex.lang_used").alias("lang"),
             F.col("ex.error").alias("error"),
         )
-
-    out_cols = ["url", *carry_cols, "lang", "text", "n_blocks", "error"]
 
     # Plan shape: routing happens BEFORE extraction, so every row passes
     # the extract UDF exactly once — branch subtrees are disjoint;
     # nothing downstream re-triggers a UDF.  (The first cut reassembled
     # AFTER a shared `extracted` node; Spark then evaluated the whole
     # UDF subtree once per consumer — a 2× extraction cost that
-    # profiling caught immediately.)
-    branches: list[DataFrame] = []
-    if not distribute_salted:
-        # Default: salt-splitting happens INSIDE the extract UDF
-        # (extract_document_split — the oracle itself).  One scan + one
-        # Arrow pass per lang partition, no reassembly shuffle.  The
-        # former explode→extract→groupBy shape ran a doc's chunks in
-        # the same task anyway (no exchange between explode and the
-        # UDF), so this is plan-for-plan faster with identical bytes.
-        for lang in LANGS:
-            by_lang = base.filter(F.col("lang") == lang)
-            branches.append(
-                _narrow(by_lang, lang, salt=salt_threshold).select(*out_cols)
-            )
-    else:
-        # distribute_salted=True: spread one monster document's chunks
-        # ACROSS tasks — split → explode → repartition the (tiny) salted
-        # subset's chunk rows → extract → ordered reassembly.  Pays a
-        # shuffle of chunk bytes; worth it only when single documents
-        # are large enough to straggle a task (payload cap bounds that
-        # at ~seconds, so the default keeps them task-local).
-        for lang in LANGS:
-            by_lang = base.filter(F.col("lang") == lang)
-            branches.append(
-                _narrow(by_lang.filter(~splittable), lang).select(*out_cols)
-            )
-            big = (
-                by_lang.filter(splittable)
-                .withColumn("chunks", _split_udf("html"))
-                .select(
-                    "url",
-                    *carry_cols,
-                    "lang",
-                    F.posexplode("chunks").alias("chunk_id", "html"),
-                )
-                .repartition(P, "url", "chunk_id")
-            )
-            reassembled = (
-                _narrow(big, lang)
-                .groupBy("url")
-                .agg(
-                    *[F.first(c).alias(c) for c in carry_cols],
-                    F.first("lang").alias("lang"),
-                    F.max("error").alias("error"),
-                    F.sum("n_blocks").cast("int").alias("n_blocks"),
-                    F.array_join(
-                        F.filter(
-                            F.transform(
-                                F.array_sort(
-                                    F.collect_list(
-                                        F.struct("chunk_id", "text")
-                                    )
-                                ),
-                                lambda x: x["text"],
-                            ),
-                            lambda t: t != F.lit(""),
-                        ),
-                        "\n",
-                    ).alias("text"),
-                )
-                .select(
-                    "url",
-                    *carry_cols,
-                    "lang",
-                    F.when(F.col("error").isNotNull(), F.lit(None))
-                    .otherwise(F.col("text"))
-                    .alias("text"),
-                    "n_blocks",
-                    "error",
-                )
-            )
-            branches.append(reassembled)
-
-    # null / unknown lang → kernel votes (R6); never split
+    # profiling caught immediately.)  Salt-splitting happens INSIDE the
+    # extract UDF (extract_document_split — the oracle itself): one
+    # scan + one Arrow pass per lang partition, no reassembly shuffle.
+    # Only known-lang rows are split: null-lang rows need a
+    # whole-document language vote (R6), and the kernel itself refuses
+    # to split PDFs, whose ordering is document-global (L2/L3).
+    branches = [
+        _narrow(base.filter(F.col("lang") == lang), lang, salt=salt_threshold)
+        for lang in LANGS
+    ]
     null_branch = base.filter(
         F.col("lang").isNull() | ~F.col("lang").isin(*LANGS)
     )
-    branches.append(_narrow(null_branch, None).select(*out_cols))
+    branches.append(_narrow(null_branch, None))
 
     out = branches[0]
     for b in branches[1:]:

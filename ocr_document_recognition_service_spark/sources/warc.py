@@ -686,6 +686,11 @@ def pages_from_file_listing(
     )
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from ocr_document_recognition_service_spark.pydeps import (
+            keep_zip_indexes,
+        )
+
+        keep_zip_indexes()
         from ocr_document_recognition_service_spark.sources.warc import (
             _BATCH_BYTES,
             _BATCH_ROWS,
@@ -752,6 +757,11 @@ def read_warc(
     )
 
     def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from ocr_document_recognition_service_spark.pydeps import (
+            keep_zip_indexes,
+        )
+
+        keep_zip_indexes()
         from ocr_document_recognition_service_spark.sources.warc import (
             _HOST_LANG_RE,
             parse_warc_bytes,

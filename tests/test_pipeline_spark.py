@@ -2,8 +2,8 @@
 
 The whole corpus — including salted/split, cp1251, PDF, malformed,
 empty-body, and null-lang rows — must extract byte-identically to the
-pure-Python oracle, through the real pipeline (repartition → split →
-lang branches → union → reassembly).
+pure-Python oracle, through the real pipeline (scan → lang branches
+with in-UDF salting → union).
 """
 
 import pandas as pd
@@ -148,32 +148,52 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
 
 
-def test_distribute_salted_path_byte_identical(spark, pages_parquet, corpus_rows):
-    """distribute_salted=True (explode + chunk repartition + reassembly)
-    must produce exactly the same rows as the default in-UDF salting."""
-    df = spark.read.parquet(pages_parquet)
-    dist = {
-        r["url"]: r
-        for r in pipeline.extract_pages(
-            df, salt_threshold=16 * 1024, num_partitions=8,
-            distribute_salted=True,
-        ).collect()
-    }
-    exp = _expected(corpus_rows)
-    assert len(dist) == len(exp)
-    for u, e in exp.items():
-        assert dist[u]["text"] == e.text, u
-        assert dist[u]["n_blocks"] == e.n_blocks, u
-        assert dist[u]["lang"] == e.lang, u
-    # and the plan genuinely redistributes chunk rows
-    plan = (
-        pipeline.extract_pages(
-            df, salt_threshold=16 * 1024, num_partitions=8,
-            distribute_salted=True,
+def test_reused_worker_keeps_zip_indexes(spark, pages_parquet):
+    """A reused Python worker that has run an extraction re-parses no
+    zip index (pyspark.zip, the spark-core jar, the package zip) in
+    later tasks: pyspark calls importlib.invalidate_caches() before
+    every task, and pydeps.keep_zip_indexes makes that a stat per
+    importer while the archive is unchanged."""
+
+    def zip_index_ids(batches):
+        """Per zip archive this worker has read, the identity of its cached
+        directory; the references kept on ``sys`` stop ids being reused."""
+        import os
+        import sys
+        import zipimport
+
+        for _ in batches:
+            pass
+        idx = dict(zipimport._zip_directory_cache)
+        sys.__dict__.setdefault("_zip_index_probe", []).append(idx)
+        kernel = "ocr_document_recognition_service_spark.extract_one"
+        yield pd.DataFrame(
+            {
+                "pid": os.getpid(),
+                "extracted": kernel in sys.modules,
+                "archive": list(idx),
+                "index_id": [id(v) for v in idx.values()],
+            }
         )
-        ._jdf.queryExecution().executedPlan().toString()
+
+    df = spark.read.parquet(pages_parquet)
+    pipeline.extract_pages(df, salt_threshold=16 * 1024).collect()
+    n = 4 * spark.sparkContext.defaultParallelism
+    probe = spark.range(n, numPartitions=n).mapInPandas(
+        zip_index_ids,
+        "pid long, extracted boolean, archive string, index_id long",
     )
-    assert "chunk_id" in plan and "Exchange" in plan
+    seen: dict[tuple[int, str], set[tuple[int, int]]] = {}
+    for job in range(2):
+        for r in probe.collect():
+            if r["extracted"]:
+                seen.setdefault((r["pid"], r["archive"]), set()).add(
+                    (job, r["index_id"])
+                )
+    twice = {k: {i for _, i in v} for k, v in seen.items()
+             if {j for j, _ in v} == {0, 1}}
+    assert any(a.endswith("pyspark.zip") for _, a in twice), seen
+    assert {k: v for k, v in twice.items() if len(v) > 1} == {}
 
 
 def test_aqe_splits_skewed_join(spark):

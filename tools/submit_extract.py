@@ -9,7 +9,7 @@ Deployment shape from the north rule:
         [--run-id ID] [--partitions N] [--salt-threshold BYTES]
 
 The package zip for --py-files is produced by
-``python3 -c "from ocr_document_recognition_service_spark.pydeps import package_zip_path; print(package_zip_path())"``.
+``python3 -m ocr_document_recognition_service_spark.pydeps ocr_document_recognition_service_spark.zip``.
 Resumable: re-submitting after a failure processes only uncommitted
 partitions of the same input snapshot.
 """
