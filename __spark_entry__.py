@@ -54,7 +54,7 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("text").alias("src_text"),
     )
     out = extract_pages(
-        pages, salt_threshold=64 * 1024, num_partitions=8,
+        pages, salt_threshold=64 * 1024,
         carry_cols=("warc_ts", "source", "src_text"),
     )
     # expected main text: "Doc" heading + whitespace-collapsed body

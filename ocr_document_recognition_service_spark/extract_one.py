@@ -218,18 +218,10 @@ def split_html(raw: bytes, target_bytes: int) -> list[bytes]:
     L2/L3); non-UTF-8 documents are never split (chunks 1+ would lose
     the ``meta charset`` declaration sniffed in chunk 0).
 
-    ``_safe_cut_points`` is a byte-twin of the FAST tokenizer only:
-    html.parser's recovery paths (unterminated comments, CDATA-ish
-    decls) can leave the stdlib backend in a different scope state at a
-    cut the fast-twin scanner deemed safe — so with any other backend
-    active, splitting is disabled entirely (byte-identity beats
-    parallel splitting; the stdlib backend is a cross-check path).
+    ``_safe_cut_points`` is a byte-twin of ``html_extract``'s
+    tokenizer (``_fast_feed``), the only one the kernel runs.
     """
-    if (
-        len(raw) <= target_bytes
-        or html_extract.BACKEND != "fast"
-        or pdf_extract.is_pdf(raw)
-    ):
+    if len(raw) <= target_bytes or pdf_extract.is_pdf(raw):
         return [raw]
     m = html_extract._CHARSET_RE.search(raw[:2048])
     if m:

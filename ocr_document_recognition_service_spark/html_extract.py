@@ -10,8 +10,10 @@ main-content blocks.
 
 Design constraints (pinned; tests depend on them):
 
-- **Parser**: stdlib ``html.parser`` (no lxml in the sandbox — SURVEY
-  §7.5).  Tolerant of malformed markup, never raises on bad nesting.
+- **Parser**: a compiled-regex tokenizer (``_fast_feed``) with
+  ``html.parser`` semantics (no lxml in the sandbox — SURVEY §7.5),
+  driving the event methods of an ``HTMLParser`` subclass.  Tolerant of
+  malformed markup, never raises on bad nesting.
 - **Locality**: every feature and the classification itself are local to
   one block.  This is what makes salt-splitting oversized documents at
   block boundaries byte-identical to unsplit extraction (SURVEY §4
@@ -256,17 +258,16 @@ class _BlockParser(HTMLParser):
 
 
 # ---------------------------------------------------------------------------
-# Fast tokenizer backend: a compiled-regex tag scanner driving the SAME
-# _BlockParser event methods (handle_starttag/data/endtag).  ~2-3×
-# faster than html.parser's goahead loop (70% of kernel time,
-# profiled); behavior is pinned by a corpus-wide byte-equality test
-# against the stdlib backend.  Matches HTMLParser semantics for:
-# comments, <!decls>, script/style rawtext, self-closing tags,
-# charref unescaping in data.
+# Tokenizer: a compiled-regex tag scanner driving the _BlockParser
+# event methods (handle_starttag/data/endtag).  ~2-3× faster than
+# html.parser's goahead loop (70% of kernel time, profiled); behavior
+# is pinned block-for-block by tests/test_fast_backend.py against
+# html.parser's own feed()/close() over the same _BlockParser.  Matches
+# HTMLParser semantics for: comments, <!decls>, script/style rawtext,
+# self-closing tags, charref unescaping in data.
 # ---------------------------------------------------------------------------
 
 import html as _htmllib
-import os as _os
 
 _TAG_RE = re.compile(
     r"""<(?:
@@ -399,22 +400,11 @@ def _fast_feed(sink: "_BlockParser", text: str) -> None:
             pos = (gt + 1) if gt != -1 else n
 
 
-# Backend selection: 'fast' (default) or 'stdlib' (html.parser).  Both
-# drive the identical block state machine; the test suite asserts
-# byte-equal output on the full engineered corpus.
-BACKEND = _os.environ.get("HTML_EXTRACT_BACKEND", "fast")
-
-
-def html_blocks(html_text: str, backend: str | None = None) -> list[Block]:
+def html_blocks(html_text: str) -> list[Block]:
     """Segment decoded HTML into block candidates (document order)."""
-    b = backend or BACKEND
     p = _BlockParser()
-    if b == "stdlib":
-        p.feed(html_text)
-        p.close()
-    else:
-        _fast_feed(p, html_text)
-        p._flush()
+    _fast_feed(p, html_text)
+    p._flush()
     return p.blocks
 
 

@@ -38,7 +38,7 @@ import re
 import zlib
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -140,6 +140,21 @@ def with_partition_id(pages: DataFrame, num_partitions: int) -> DataFrame:
     )
 
 
+def _texts_md5() -> Column:
+    """Aggregate: md5 of the group's texts joined by ``SEP`` in url
+    order, a null text rendered as ``"\\x00<null>"`` — the digest behind
+    both ``output_md5`` and ``global_md5``."""
+    return F.md5(
+        F.concat_ws(
+            SEP,
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("url", "text"))),
+                lambda x: F.coalesce(x["text"], F.lit("\x00<null>")),
+            ),
+        )
+    )
+
+
 def partition_lineage(extracted: DataFrame) -> DataFrame:
     """Per-partition lineage aggregate over extracted output carrying
     ``pid``: row count + md5 of texts concatenated in url order."""
@@ -148,15 +163,7 @@ def partition_lineage(extracted: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias(
             "error_count"
         ),
-        F.md5(
-            F.concat_ws(
-                SEP,
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("url", "text"))),
-                    lambda x: F.coalesce(x["text"], F.lit("\x00<null>")),
-                ),
-            )
-        ).alias("output_md5"),
+        _texts_md5().alias("output_md5"),
     )
 
 
@@ -325,7 +332,6 @@ def run_extraction(
     extracted = extract_pages(
         pages,
         salt_threshold=salt_threshold,
-        num_partitions=num_partitions,
         carry_cols=("warc_ts", "pid"),
     )
 
@@ -434,6 +440,7 @@ def run_extraction(
         "rows": sum(r["row_count"] for r in mine),
     }
 
+
 def global_md5(
     spark: SparkSession, output_path: str, snapshot_id: int | None = None
 ) -> str:
@@ -443,16 +450,4 @@ def global_md5(
     output dir holds several."""
     if snapshot_id is not None:
         output_path = snapshot_output_dir(output_path, snapshot_id)
-    df = spark.read.parquet(output_path)
-    row = df.agg(
-        F.md5(
-            F.concat_ws(
-                SEP,
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("url", "text"))),
-                    lambda x: F.coalesce(x["text"], F.lit("\x00<null>")),
-                ),
-            )
-        ).alias("h")
-    ).collect()[0]
-    return row["h"]
+    return spark.read.parquet(output_path).agg(_texts_md5()).first()[0]

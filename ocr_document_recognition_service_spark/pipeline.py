@@ -136,7 +136,7 @@ def extract_pages(
 
     ``carry_cols`` pass through untouched (e.g. lineage partition id).
     ``num_partitions`` is accepted and ignored: extraction reads scan
-    partitions, and callers still pass it.
+    partitions, and ``bench.py`` and ``perfbench/`` still pass it.
 
     Shuffle placement (measured, not guessed): extraction reads SCAN
     partitions directly — ``maxPartitionBytes`` already yields even

@@ -3544,7 +3544,7 @@ def x_extract_pages(spark: SparkSession, sf: str) -> DataFrame:
     from ..pipeline import extract_pages
 
     pages = _synthetic_pages_df(spark, 150)
-    out = extract_pages(pages, salt_threshold=16 * 1024, num_partitions=8)
+    out = extract_pages(pages, salt_threshold=16 * 1024)
     return out.select(
         "url",
         "lang",
@@ -3564,7 +3564,7 @@ def x_extract_lang_rollup(spark: SparkSession, sf: str) -> DataFrame:
     from ..pipeline import extract_pages
 
     pages = _synthetic_pages_df(spark, 150)
-    out = extract_pages(pages, salt_threshold=16 * 1024, num_partitions=8)
+    out = extract_pages(pages, salt_threshold=16 * 1024)
     return out.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_blocks").alias("total_blocks"),
@@ -3587,7 +3587,7 @@ def x_curate_corpus(spark: SparkSession, sf: str) -> DataFrame:
     from ..pipeline import extract_pages
 
     pages = _synthetic_pages_df(spark, 200)
-    extracted = extract_pages(pages, salt_threshold=16 * 1024, num_partitions=8)
+    extracted = extract_pages(pages, salt_threshold=16 * 1024)
     out = curate(extracted, min_tokens=10, min_score=0.2, n_per_lang=1000)
     # materialize, then release the pipeline's internal cache — repeated
     # invocations must not accumulate persisted blocks in the session
@@ -3727,7 +3727,7 @@ def x_warc_extract(spark: SparkSession, sf: str) -> DataFrame:
 
     d = _warc_corpus()
     pages = warc.read_warc_stream(spark, os.path.join(d, "*.warc.gz"))
-    out = extract_pages(pages, num_partitions=8)
+    out = extract_pages(pages)
     return (
         out.groupBy("lang")
         .agg(

@@ -54,12 +54,8 @@ def build_session(
         # serialized sort writer, which writes ONE spill file per map
         # task).  0 disables the bypass path everywhere — the same
         # writer Spark itself picks whenever R > 200, so the choice is
-        # scale-neutral, not a local[32] tune.  Env-overridable for
-        # profiles where many tiny files are free.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_MERGE", "0"),
-        )
+        # scale-neutral, not a local[32] tune.
+        .config("spark.shuffle.sort.bypassMergeThreshold", "0")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
         .config("spark.sql.files.maxPartitionBytes", "134217728")

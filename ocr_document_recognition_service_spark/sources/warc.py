@@ -3,29 +3,24 @@ table shape (url, warc_ts, html, text, lang).
 
 The engine's canonical input is an Iceberg/parquet pages table, but the
 raw upstream format for web corpora is WARC — the format 100 TB
-actually arrives in.  Two read paths:
-
-- ``read_warc_stream`` (the scale path): distributed file listing →
-  one task per WARC file (files are the natural parallel unit,
-  typically ~1 GB each in Common Crawl, so a 100 TB crawl is ~100k
-  independent tasks) → RECORD-STREAMING parse with O(record) peak
-  memory: gzip members are decompressed incrementally in fixed-size
-  chunks (``gzip.GzipFile`` walks Common Crawl's
-  one-member-per-record layout transparently), records are cut out of
-  a bounded rolling buffer, any single record is retained only up to
-  ``max_payload_bytes`` + a small envelope allowance (the rest is
-  consumed and discarded, and the kept prefix is guaranteed to stay
-  LONGER than the extraction kernel's cap so the row surfaces as the
-  standard ``PayloadTooLarge`` error row rather than silently
-  truncated content), and rows leave the worker as byte-bounded Arrow
-  batches.  The whole file is NEVER materialized — this is the analog
-  of the reference's streaming directory loaders
-  (core/pipelines/loaders/image_loader.py:14-31) on the web-corpus
-  input format.
-
-- ``read_warc`` (small-file/test path): ``binaryFile`` whole-blob scan
-  + ``parse_warc_bytes``.  Simple and fine under the binaryFile 2 GB
-  cap; tests pin it byte-identical to the streaming path.
+actually arrives in.  ``read_warc_stream`` is the one read path:
+distributed file listing → one task per WARC file (files are the
+natural parallel unit, typically ~1 GB each in Common Crawl, so a
+100 TB crawl is ~100k independent tasks) → RECORD-STREAMING parse with
+O(record) peak memory: gzip members are decompressed incrementally in
+fixed-size chunks (``gzip.GzipFile`` walks Common Crawl's
+one-member-per-record layout transparently), records are cut out of a
+bounded rolling buffer, any single record is retained only up to
+``max_payload_bytes`` + a small envelope allowance (the rest is
+consumed and discarded, and the kept prefix is guaranteed to stay
+LONGER than the extraction kernel's cap so the row surfaces as the
+standard ``PayloadTooLarge`` error row rather than silently truncated
+content), and rows leave the worker as byte-bounded Arrow batches.  The
+whole file is NEVER materialized — this is the analog of the
+reference's streaming directory loaders
+(core/pipelines/loaders/image_loader.py:14-31) on the web-corpus input
+format.  ``parse_warc_bytes`` is the in-memory whole-blob parse that
+the tests use as its reference.
 
 Only ``WARC-Type: response`` records with an HTTP payload become rows;
 everything else (warcinfo, request, metadata) is skipped — the standard
@@ -731,55 +726,6 @@ def pages_from_file_listing(
                         rows, pend = [], 0
         if rows:
             yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(parse, schema=PAGES_SCHEMA)
-
-
-def read_warc(
-    spark: SparkSession,
-    path_glob: str,
-    infer_lang_from_host: bool = True,
-) -> DataFrame:
-    """Whole-blob WARC → pages DataFrame (small-file/test path).
-
-    One task per WARC file (binaryFile scan, 2 GB/file cap); the blob
-    is materialized and parsed in memory — fine for fixtures, WRONG
-    for real crawls: use ``read_warc_stream`` for anything sized.
-    ``lang`` is inferred from a two-letter host prefix (our corpus
-    convention) when requested, else left null for the pipeline's
-    language-vote branch.  Pinned row-identical to the streaming path.
-    """
-    from ..pydeps import ensure_py_deps
-
-    ensure_py_deps(spark)
-    files = spark.read.format("binaryFile").load(path_glob).select(
-        "path", "content"
-    )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_document_recognition_service_spark.pydeps import (
-            keep_zip_indexes,
-        )
-
-        keep_zip_indexes()
-        from ocr_document_recognition_service_spark.sources.warc import (
-            _HOST_LANG_RE,
-            parse_warc_bytes,
-        )
-
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"]:
-                for url, ts, payload in parse_warc_bytes(bytes(blob)):
-                    lang = None
-                    if infer_lang_from_host:
-                        m = _HOST_LANG_RE.match(url)
-                        if m and m.group(1) in LANGS:
-                            lang = m.group(1)
-                    rows.append((url, ts, payload, None, lang))
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
 
     return files.mapInPandas(parse, schema=PAGES_SCHEMA)
 

@@ -39,17 +39,14 @@ def _extract_and_sink(
     batch_id: int,
     output_path: str,
     salt_threshold: int,
-    num_partitions: int,
 ) -> None:
     """Shared micro-batch tail of both ingestion paths: the batch
     extraction plan + the idempotent batch_id-partition sink.  ONE
     copy so the exactly-once contract cannot drift between the parquet
     and WARC streams (review finding)."""
-    out = extract_pages(
-        pages_df,
-        salt_threshold=salt_threshold,
-        num_partitions=num_partitions,
-    ).withColumn("batch_id", F.lit(batch_id))
+    out = extract_pages(pages_df, salt_threshold=salt_threshold).withColumn(
+        "batch_id", F.lit(batch_id)
+    )
     write_batch_idempotent(out, output_path)
 
 
@@ -72,7 +69,6 @@ def incremental_extract(
     stream_checkpoint: str,
     *,
     salt_threshold: int = 64 * 1024,
-    num_partitions: int = 32,
 ) -> None:
     """Drain all currently-available page files into the output table.
 
@@ -91,9 +87,7 @@ def incremental_extract(
     )
 
     def process_batch(batch_df, batch_id: int) -> None:
-        _extract_and_sink(
-            batch_df, batch_id, output_path, salt_threshold, num_partitions
-        )
+        _extract_and_sink(batch_df, batch_id, output_path, salt_threshold)
 
     _drain(stream, process_batch, stream_checkpoint)
 
@@ -105,7 +99,6 @@ def incremental_warc_extract(
     stream_checkpoint: str,
     *,
     salt_threshold: int = 64 * 1024,
-    num_partitions: int = 32,
     max_files_per_trigger: int = 8,
     infer_lang_from_host: bool = True,
 ) -> None:
@@ -157,9 +150,7 @@ def incremental_warc_extract(
             spark, files, infer_lang_from_host=infer_lang_from_host
         ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            _extract_and_sink(
-                pages, batch_id, output_path, salt_threshold, num_partitions
-            )
+            _extract_and_sink(pages, batch_id, output_path, salt_threshold)
         finally:
             pages.unpersist(blocking=False)
 

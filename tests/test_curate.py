@@ -22,7 +22,7 @@ def curated(spark):
     dup["url"] = "https://zz-dup.example.org/doc/copy"
     rows.append(dup)
     pages = spark.createDataFrame(pd.DataFrame(rows), schema=PAGES_SCHEMA)
-    extracted = extract_pages(pages, salt_threshold=16 * 1024, num_partitions=8)
+    extracted = extract_pages(pages, salt_threshold=16 * 1024)
     return rows, curate(extracted, min_tokens=10, min_score=0.2, n_per_lang=500)
 
 
@@ -67,7 +67,7 @@ def test_stats_shape_and_determinism(curated, spark):
     # a genuinely fresh curate() invocation over freshly-built input
     # must yield the identical curated set (determinism contract)
     pages = spark.createDataFrame(pd.DataFrame(rows), schema=PAGES_SCHEMA)
-    extracted = extract_pages(pages, salt_threshold=16 * 1024, num_partitions=8)
+    extracted = extract_pages(pages, salt_threshold=16 * 1024)
     out2 = curate(extracted, min_tokens=10, min_score=0.2, n_per_lang=500)
     first = {r["url"] for r in out["curated"].collect()}
     second = {r["url"] for r in out2["curated"].collect()}
@@ -130,7 +130,7 @@ def test_full_pipeline_composes_from_config(spark):
 
     rows = list(gen_pages.gen_rows(120))
     pages = spark.createDataFrame(pd.DataFrame(rows), schema=PAGES_SCHEMA)
-    extracted = extract_pages(pages, salt_threshold=16 * 1024, num_partitions=8)
+    extracted = extract_pages(pages, salt_threshold=16 * 1024)
     cfg = stages.full_curate_config(
         min_tokens=5, min_score=0.0, n_per_lang=50, seed=7
     )

@@ -1,18 +1,30 @@
-"""Fast regex tokenizer backend == stdlib html.parser backend,
-block-for-block (tag, boiler flag, text, densities) — the pinning that
-lets the fast path be the default without touching goldens."""
+"""The regex tokenizer behind ``html_blocks`` == the stdlib
+``html.parser`` tokenizer, block-for-block (tag, boiler flag, text,
+densities), over the same ``_BlockParser`` state machine — the pinning
+that lets the fast tokenizer run the kernel without touching goldens."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ocr_document_recognition_service_spark import gen_pages, html_extract
+from ocr_document_recognition_service_spark import html_extract
 
 
-def _blocks(text, backend):
+def _key(blocks):
     return [
-        (b.tag, b.boiler, b.text, b.link_chars, b.raw_chars)
-        for b in html_extract.html_blocks(text, backend=backend)
+        (b.tag, b.boiler, b.text, b.link_chars, b.raw_chars) for b in blocks
     ]
+
+
+def _stdlib_blocks(text):
+    """Reference: html.parser's own feed()/close() drive the parser."""
+    p = html_extract._BlockParser()
+    p.feed(text)
+    p.close()
+    return _key(p.blocks)
+
+
+def _fast_blocks(text):
+    return _key(html_extract.html_blocks(text))
 
 
 def test_backends_agree_on_corpus(corpus_rows):
@@ -20,7 +32,7 @@ def test_backends_agree_on_corpus(corpus_rows):
         if r["html"][:4] == b"%PDF":
             continue
         t = html_extract.sniff_decode(r["html"])
-        assert _blocks(t, "stdlib") == _blocks(t, "fast"), r["url"]
+        assert _stdlib_blocks(t) == _fast_blocks(t), r["url"]
 
 
 _frag = st.sampled_from(
@@ -40,8 +52,4 @@ _frag = st.sampled_from(
 @given(st.lists(_frag, max_size=40))
 def test_backends_agree_property(frags):
     t = "".join(frags)
-    assert _blocks(t, "stdlib") == _blocks(t, "fast")
-
-
-def test_default_backend_is_fast():
-    assert html_extract.BACKEND == "fast"
+    assert _stdlib_blocks(t) == _fast_blocks(t)

@@ -123,7 +123,7 @@ def test_streaming_incremental_matches_batch(spark, tmp_path):
     gen_pages.write_pages_parquet(str(src / "part1.parquet"), 60)
     out = str(tmp_path / "stream_out")
     ck = str(tmp_path / "stream_ck")
-    incremental_extract(spark, str(src), out, ck, num_partitions=4)
+    incremental_extract(spark, str(src), out, ck)
     got = {r["url"]: r["text"] for r in spark.read.parquet(out).collect()}
     assert len(got) == 60
     for r in gen_pages.gen_rows(60):
@@ -132,12 +132,12 @@ def test_streaming_incremental_matches_batch(spark, tmp_path):
         ).text
 
     # drain again with no new files: exactly-once, nothing re-ingested
-    incremental_extract(spark, str(src), out, ck, num_partitions=4)
+    incremental_extract(spark, str(src), out, ck)
     assert spark.read.parquet(out).count() == 60
 
     # second drop: ONLY the new file's rows are processed
     gen_pages.write_pages_parquet(str(src / "part2.parquet"), 25, start=60)
-    incremental_extract(spark, str(src), out, ck, num_partitions=4)
+    incremental_extract(spark, str(src), out, ck)
     got2 = {r["url"]: r["text"] for r in spark.read.parquet(out).collect()}
     assert len(got2) == 85
     for i, r in enumerate(gen_pages.gen_rows(85)):

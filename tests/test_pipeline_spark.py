@@ -25,7 +25,7 @@ def _expected(corpus_rows):
 @pytest.fixture(scope="module")
 def extracted(spark, pages_parquet):
     df = spark.read.parquet(pages_parquet)
-    out = pipeline.extract_pages(df, salt_threshold=16 * 1024, num_partitions=8)
+    out = pipeline.extract_pages(df, salt_threshold=16 * 1024)
     return {row["url"]: row for row in out.collect()}
 
 
@@ -86,7 +86,6 @@ def test_payload_cap_routes_to_error_row_not_split(spark, corpus_rows):
         for r in pipeline.extract_pages(
             df,
             salt_threshold=16 * 1024,
-            num_partitions=4,
             max_payload_bytes=64 * 1024,
         ).collect()
     }

@@ -1,62 +1,8 @@
 """Structured Streaming operators vs their batch twins."""
 
-import shutil
-
 import pytest
-from pyspark.sql import functions as F
-
-from ocr_document_recognition_service_spark.streaming import windowed
 
 pytestmark = pytest.mark.spark
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def events_dir(spark, tmp_path_factory):
-    d = tmp_path_factory.mktemp("ev_stream")
-    shutil.copy(f"{SF}/events.parquet", d / "part1.parquet")
-    return str(d)
-
-
-def _drain(stream_df, spark, name):
-    (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete" if name == "win" else "update")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    return spark.sql(f"select * from {name}")
-
-
-def test_windowed_counts_match_batch(spark, events_dir):
-    batch = spark.read.parquet(events_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    got = _drain(windowed.windowed_event_counts(stream), spark, "win")
-    expect = windowed.windowed_event_counts(batch)
-    g = {tuple(r) for r in got.collect()}
-    e = {tuple(r) for r in expect.collect()}
-    assert g == e and len(g) > 0
-
-
-def test_stateful_user_counts(spark, events_dir):
-    batch = spark.read.parquet(events_dir)
-    stream = spark.readStream.schema(batch.schema).parquet(events_dir)
-    got = _drain(windowed.stateful_user_counts(stream), spark, "usr")
-    # single drain → running totals equal the batch aggregate
-    expect = batch.groupBy("user_id").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    g = {(r["user_id"], r["n_events"], r["total_value"]) for r in got.collect()}
-    e = {tuple(r) for r in expect.collect()}
-    assert g == e and len(g) > 0
 
 
 def test_foreachbatch_sink_idempotent_on_replay(spark, tmp_path):
@@ -80,57 +26,6 @@ def test_foreachbatch_sink_idempotent_on_replay(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 15
     assert got.filter(F.col("batch_id") == 0).count() == 10
-
-
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """Duplicate urls across files within the watermark are dropped;
-    the surviving set equals batch dropDuplicates on the same input."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import datetime as dt
-
-    from ocr_document_recognition_service_spark.streaming.windowed import (
-        streaming_dedup,
-    )
-
-    base = dt.datetime(2024, 1, 1)
-    def write(path, rows):
-        pq.write_table(
-            pa.table(
-                {
-                    "url": pa.array([r[0] for r in rows], pa.string()),
-                    "warc_ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
-                    "n": pa.array([r[2] for r in rows], pa.int64()),
-                }
-            ),
-            path,
-        )
-
-    src = tmp_path / "dedup_src"
-    src.mkdir()
-    write(str(src / "a.parquet"), [
-        ("u/1", base, 1), ("u/2", base + dt.timedelta(minutes=5), 2),
-        ("u/1", base + dt.timedelta(minutes=10), 3),  # in-file dup
-    ])
-    write(str(src / "b.parquet"), [
-        ("u/2", base + dt.timedelta(minutes=20), 4),  # cross-file dup
-        ("u/3", base + dt.timedelta(minutes=30), 5),
-    ])
-    stream = (
-        spark.readStream.schema("url string, warc_ts timestamp, n long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    dd = streaming_dedup(stream, key="url", ts_col="warc_ts")
-    (
-        dd.writeStream.format("memory").queryName("sdedup")
-        .outputMode("append").trigger(availableNow=True)
-        .start().awaitTermination()
-    )
-    got = {r["url"] for r in spark.sql("SELECT * FROM sdedup").collect()}
-    batch = streaming_dedup(spark.read.parquet(str(src)), key="url", ts_col="warc_ts")
-    assert got == {r["url"] for r in batch.collect()} == {"u/1", "u/2", "u/3"}
-    assert spark.sql("SELECT count(*) FROM sdedup").collect()[0][0] == 3
 
 
 def test_incremental_neardup_first_wins_and_idempotent(spark, tmp_path):

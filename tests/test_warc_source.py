@@ -3,37 +3,56 @@
 import pytest
 
 from ocr_document_recognition_service_spark import extract_one, gen_pages
+from ocr_document_recognition_service_spark.charsets import LANGS
 from ocr_document_recognition_service_spark.pipeline import extract_pages
 from ocr_document_recognition_service_spark.sources import warc
 
 pytestmark = pytest.mark.spark
 
 
+def _reference_rows(*paths):
+    """Driver-side reference for ``read_warc_stream``: the whole-blob
+    ``parse_warc_bytes`` of each file, with lang taken from a two-letter
+    host prefix that names a known lang, else null."""
+    out = []
+    for p in paths:
+        for url, ts, payload in warc.parse_warc_bytes(p.read_bytes()):
+            host = url.split("//", 1)[1]
+            lang = host[:2] if host[2:3] == "." and host[:2] in LANGS else None
+            out.append((url, payload, ts, lang))
+    return sorted(out)
+
+
+def _rows(pages):
+    return sorted(
+        (r["url"], bytes(r["html"]), r["warc_ts"], r["lang"])
+        for r in pages.collect()
+    )
+
+
 def test_warc_roundtrip_and_extraction(spark, tmp_path, corpus_rows):
     rows = corpus_rows[:120]
     mid = len(rows) // 2
-    for i, chunk in enumerate((rows[:mid], rows[mid:])):
+    paths = [tmp_path / "part0.warc", tmp_path / "part1.warc"]
+    for p, chunk in zip(paths, (rows[:mid], rows[mid:])):
         warc.write_warc(
-            str(tmp_path / f"part{i}.warc"),
-            [(r["url"], r["warc_ts"], r["html"]) for r in chunk],
+            str(p), [(r["url"], r["warc_ts"], r["html"]) for r in chunk]
         )
 
-    pages = warc.read_warc(spark, str(tmp_path / "*.warc"))
-    got = {r["url"]: r for r in pages.collect()}
-    assert len(got) == 120
+    pages = warc.read_warc_stream(spark, str(tmp_path / "*.warc"))
+    got = _rows(pages)
+    assert got == _reference_rows(*paths) and len(got) == 120
+    by_url = {g[0]: g for g in got}
     sample = rows[3]
-    assert bytes(got[sample["url"]]["html"]) == sample["html"]
-    assert got[sample["url"]]["warc_ts"] == sample["warc_ts"].replace(
+    assert by_url[sample["url"]][1] == sample["html"]
+    assert by_url[sample["url"]][2] == sample["warc_ts"].replace(
         microsecond=0
     )
     # lang inferred from host prefix == generator's actual lang
     for r in rows:
-        assert got[r["url"]]["lang"] == r["url"].split("//")[1][:2]
+        assert by_url[r["url"]][3] == r["url"].split("//")[1][:2]
 
-    out = {
-        r["url"]: r["text"]
-        for r in extract_pages(pages, num_partitions=4).collect()
-    }
+    out = {r["url"]: r["text"] for r in extract_pages(pages).collect()}
     # byte-identity vs the oracle, with lang inferred from the host
     for r in rows:
         lang = r["url"].split("//")[1][:2]
@@ -43,6 +62,7 @@ def test_warc_roundtrip_and_extraction(spark, tmp_path, corpus_rows):
 
 
 def test_gzipped_warc_supported(spark, tmp_path, corpus_rows):
+    """A whole-file .warc.gz (ONE gzip member around every record)."""
     import gzip
 
     rows = corpus_rows[:30]
@@ -54,11 +74,11 @@ def test_gzipped_warc_supported(spark, tmp_path, corpus_rows):
     gz_path.write_bytes(gzip.compress(raw_path.read_bytes()))
     raw_path.unlink()  # only the .gz remains, as Common Crawl ships it
 
-    pages = warc.read_warc(spark, str(tmp_path / "*.warc.gz"))
-    got = {r["url"]: bytes(r["html"]) for r in pages.collect()}
-    assert len(got) == 30
+    got = _rows(warc.read_warc_stream(spark, str(tmp_path / "*.warc.gz")))
+    assert got == _reference_rows(gz_path) and len(got) == 30
+    html = {g[0]: g[1] for g in got}
     for r in rows:
-        assert got[r["url"]] == r["html"]
+        assert html[r["url"]] == r["html"]
 
 
 def test_stream_parse_matches_blob_parse(tmp_path, corpus_rows):
@@ -169,25 +189,19 @@ def test_stream_parse_resyncs_past_hostile_header(tmp_path):
 
 
 def test_read_warc_stream_matches_blob_reader(spark, tmp_path, corpus_rows):
-    """The distributed streaming reader returns the same rows as the
-    binaryFile path over a mixed plain/.gz directory, and feeds the
-    same byte-identical extraction."""
+    """The distributed streaming reader returns the rows of the
+    whole-blob ``parse_warc_bytes`` over a mixed plain/.gz directory,
+    and feeds the same byte-identical extraction."""
     rows = corpus_rows[:60]
     recs = [(r["url"], r["warc_ts"], r["html"]) for r in rows]
-    warc.write_warc(str(tmp_path / "p0.warc"), recs[:30])
-    warc.write_warc_gz(str(tmp_path / "p1.warc.gz"), recs[30:])
+    plain, per_record = tmp_path / "p0.warc", tmp_path / "p1.warc.gz"
+    warc.write_warc(str(plain), recs[:30])
+    warc.write_warc_gz(str(per_record), recs[30:])
 
     stream = warc.read_warc_stream(spark, str(tmp_path / "p*.warc*"))
-    blob = warc.read_warc(spark, str(tmp_path / "p*.warc*"))
-    key = lambda r: (r["url"], bytes(r["html"]), r["warc_ts"], r["lang"])
-    assert sorted(map(key, stream.collect())) == sorted(
-        map(key, blob.collect())
-    )
+    assert _rows(stream) == _reference_rows(plain, per_record)
 
-    out = {
-        r["url"]: r["text"]
-        for r in extract_pages(stream, num_partitions=4).collect()
-    }
+    out = {r["url"]: r["text"] for r in extract_pages(stream).collect()}
     for r in rows[:10]:
         lang = r["url"].split("//")[1][:2]
         assert out[r["url"]] == extract_one.extract_document(
@@ -445,9 +459,7 @@ def test_incremental_warc_extract_exactly_once(spark, tmp_path):
 
     drop("seg0.warc.gz", rows[:30])
     drop("seg1.warc.gz", rows[30:55])
-    incremental_warc_extract(
-        spark, str(src / "*.warc.gz"), out, ck, num_partitions=4
-    )
+    incremental_warc_extract(spark, str(src / "*.warc.gz"), out, ck)
     got = {r["url"]: r["text"] for r in spark.read.parquet(out).collect()}
     assert len(got) == 55
     for r in rows[:55]:
@@ -457,16 +469,12 @@ def test_incremental_warc_extract_exactly_once(spark, tmp_path):
         ).text
 
     # drain with nothing new: exactly-once, nothing re-ingested
-    incremental_warc_extract(
-        spark, str(src / "*.warc.gz"), out, ck, num_partitions=4
-    )
+    incremental_warc_extract(spark, str(src / "*.warc.gz"), out, ck)
     assert spark.read.parquet(out).count() == 55
 
     # a late archive arrives: only its records are processed
     drop("seg2.warc.gz", rows[55:])
-    incremental_warc_extract(
-        spark, str(src / "*.warc.gz"), out, ck, num_partitions=4
-    )
+    incremental_warc_extract(spark, str(src / "*.warc.gz"), out, ck)
     got2 = {r["url"]: r["text"] for r in spark.read.parquet(out).collect()}
     assert len(got2) == 80
     for r in rows:
@@ -674,9 +682,9 @@ def test_shared_warc_pages_equals_direct_and_unpersists(
     warc.write_warc_gz(str(tmp_path / "b.warc.gz"), recs[40:])
     glob = str(tmp_path / "*.warc.gz")
 
-    direct = extract_pages(
-        warc.read_warc_stream(spark, glob), num_partitions=4
-    ).select("url", "lang", "n_blocks", "text", "error")
+    direct = extract_pages(warc.read_warc_stream(spark, glob)).select(
+        "url", "lang", "n_blocks", "text", "error"
+    )
     want = sorted(map(tuple, direct.collect()))
 
     with warc.shared_warc_pages(spark, glob) as pages:
@@ -684,7 +692,7 @@ def test_shared_warc_pages_equals_direct_and_unpersists(
         got = sorted(
             map(
                 tuple,
-                extract_pages(pages, num_partitions=4)
+                extract_pages(pages)
                 .select("url", "lang", "n_blocks", "text", "error")
                 .collect(),
             )

@@ -48,7 +48,7 @@ def main() -> int:
         t_gen = time.time() - t0
 
         src = spark.read.parquet(d + "/pages")
-        out = extract_pages(src, num_partitions=256).select(
+        out = extract_pages(src).select(
             "url", "lang", "n_blocks", "text", "error"
         )
         t0 = time.time()

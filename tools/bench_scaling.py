@@ -38,7 +38,6 @@ N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else int(
     os.environ.get("SCALING_DOCS", "300000")
 )
 N_KERNEL = 20000  # pure-python baseline corpus (per level)
-PARTITIONS = 128
 
 _CHILD = r"""
 import json, sys, time, os
@@ -55,7 +54,7 @@ spark = build_session(
            "spark.sql.files.openCostInBytes": "1048576"}})
 spark.sparkContext.setLogLevel("ERROR")
 src = spark.read.parquet(src_dir)
-out = extract_pages(src, num_partitions={parts}).select(
+out = extract_pages(src).select(
     "url", "lang", "n_blocks", "text", "error")
 runs = []
 for _ in range(4):
@@ -122,13 +121,13 @@ def main() -> int:
     # 3. spark runs, fresh JVM per (cores, corpus) leg
     results = {}
     legs = [
-        ("strong8", 8, corpus + "/pages", PARTITIONS),
-        ("strong32", 32, corpus + "/pages", PARTITIONS),
-        ("weak8", 8, corpus + "/pages_small", PARTITIONS // 4),
+        ("strong8", 8, corpus + "/pages"),
+        ("strong32", 32, corpus + "/pages"),
+        ("weak8", 8, corpus + "/pages_small"),
     ]
+    child = _CHILD.format(repo=REPO)
     try:
-        for name, cores, src, parts in legs:
-            child = _CHILD.format(repo=REPO, parts=parts)
+        for name, cores, src in legs:
             print(f"running {name}: local[{cores}] on {src} …", file=sys.stderr)
             # taskset pins JVM + Python workers to exactly N cores: with
             # pandas UDFs, un-pinned local[8] silently borrows extra
@@ -180,8 +179,6 @@ Freshest run of the method above (fresh pinned JVM per leg, min of
 warm runs; fold into the per-session history table when coherent).
 
 ### Strong scaling: same {N_DOCS:,}-doc input, local[8] vs local[32]
-
-{PARTITIONS} url-hash partitions.
 
 | parallelism | wall (s) | docs/sec |
 |---|---|---|

@@ -52,7 +52,7 @@ def main() -> int:
             "per lang — salting happens inside the extract UDF); html is "
             "dropped right after ArrowEvalPython; no exchange below the "
             "union at all.",
-            plan_of(extract_pages(src, salt_threshold=16 * 1024, num_partitions=8)),
+            plan_of(extract_pages(src, salt_threshold=16 * 1024)),
         )
     )
 
@@ -154,10 +154,7 @@ def main() -> int:
             "then parse and the per-lang extract branches run with no "
             "shuffle of html anywhere.",
             plan_of(
-                extract_pages(
-                    _warc.read_warc_stream(spark, wd + "/*.warc.gz"),
-                    num_partitions=8,
-                )
+                extract_pages(_warc.read_warc_stream(spark, wd + "/*.warc.gz"))
             ),
         )
     )
