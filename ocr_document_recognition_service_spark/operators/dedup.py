@@ -742,7 +742,6 @@ def semantic_dedup(
     two_level: bool = False,
     coarse_probe: int = 2,
     coarse_iters: int = 1,
-    engine: str = "codegen",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication — k-means the embedding space, then within each
@@ -777,10 +776,9 @@ def semantic_dedup(
     the multi-probe contract: a mate is found if the keeper's primary
     cell is among the vector's P nearest.
 
-    *sample_cap* / *two_level* / *coarse_probe* / *engine* are the
-    r6-verdict at-scale quantizer knobs (sampled Lloyd training,
-    O(√k)-per-row two-level assignment, Arrow-vectorized distance
-    engine — see ``similarity._kmeans_centroids`` and
+    *sample_cap* / *two_level* / *coarse_probe* are the r6-verdict
+    at-scale quantizer knobs (sampled Lloyd training, O(√k)-per-row
+    two-level assignment — see ``similarity._kmeans_centroids`` and
     ``similarity._assign_two_level``); defaults keep the legacy exact
     contract.  At-scale cap sizing: *cell_cap* = 4× the mean cell
     (measured — 2× headroom truncated 2.5×-mean skewed Lloyd cells
@@ -804,7 +802,6 @@ def semantic_dedup(
         two_level=two_level,
         coarse_probe=coarse_probe,
         coarse_iters=coarse_iters,
-        engine=engine,
     )
     cells = assign(1)
     probes = assign(n_probe) if n_probe > 1 else cells

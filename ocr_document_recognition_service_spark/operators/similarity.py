@@ -11,13 +11,17 @@
   key, so a top-k probe reads one bucket, not the corpus.
 
 Every registered plan is ARRAY-NATIVE: dot products / norms / L2 are
-``zip_with`` + ``aggregate`` over the embedding arrays — whole-stage
-codegen, zero shuffle for per-vector math, no ×dim posexplode
-amplification in the hot path.  The DuckDB oracles keep the unnested
-(flat) arithmetic; parity holds because every per-element product is
-computed in double in BOTH engines and every compared value (cosine,
-dist2) is rounded (4/6 dp) before ranking — array-order vs
-unnest-order summation ulps cannot survive the rounding.
+``zip_with`` + ``aggregate`` over the embedding arrays — zero shuffle
+for per-vector math, no ×dim posexplode amplification in the hot
+path.  The two quantizer hot loops — two-level centroid assignment
+(``_assign_two_level``) and PQ asymmetric-distance scoring
+(``_pq_adc_scores``) — are numpy kernels inside ``mapInPandas``
+instead, with the same arithmetic.  The DuckDB oracles keep the
+unnested (flat) arithmetic; parity holds because every per-element
+product is computed in double in Spark, numpy and DuckDB alike and
+every compared value (cosine, dist2) is rounded (4/6 dp, HALF_UP)
+before ranking — array-order vs unnest-order summation ulps cannot
+survive the rounding.
 """
 
 from __future__ import annotations
@@ -26,6 +30,8 @@ import math
 import random
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..pydeps import ensure_py_deps
 
 N_PLANES = 8
 EMB_DIM = 64
@@ -613,10 +619,14 @@ def _coarse_model(
     becomes coarse-scan + fine-scan-within-probed-coarse-cells: O(√k)
     per row instead of O(k).
 
-    Returns ``{"coarse_rows": [(ccell, carr)...], "fine_map":
-    (coarse, cell, carr) DataFrame, "n_coarse": kc}`` — coarse
-    centroids as driver-side literals (≤ √k rows, tiny) and the
-    fine→coarse membership for the broadcast candidate join."""
+    Returns ``{"ccells": (kc',) int64, "coarse": (kc', dim) float64,
+    "groups": {coarse cell: (fine cells (n,), fine centroids (n,
+    dim))}}`` — numpy arrays, the coarse axis sorted by cell id,
+    grouped ONCE on the driver from one collect of the k-row
+    fine→coarse map.  They ship to executors in the assignment's task
+    closure; at k beyond ~1M the fine groups outgrow a closure."""
+    import numpy as np
+
     n_coarse = max(1, math.ceil(math.sqrt(n_cells)))
     # the k-row centroid frame arrives AQE-coalesced to 1-2 partitions
     # (17 MB at k=31k); the k×kc interpreted-HOF crossJoins below then
@@ -629,17 +639,19 @@ def _coarse_model(
     coarse = _kmeans_centroids(
         cents_emb, n_coarse, coarse_iters, dim, init_by_rank=True
     )
-    m = _assign_to(cents_emb, coarse)
-    f2c = m.select(
+    f2c = _assign_to(cents_emb, coarse).select(
         F.col("vec_id").alias("cell"), F.col("cell").alias("coarse")
     )
-    # fine_map feeds every assignment call sharing this model (primary
-    # + probe side + training round) — persist so the k×kc argmin
-    # chain above it evaluates ONCE, not per consumer
-    fine_map = (
-        cents.join(f2c, "cell").select("coarse", "cell", "carr").persist()
-    )
-    fine_map.count()
+    rows: dict[int, list] = {}
+    for r in cents.join(f2c, "cell").select("coarse", "cell", "carr").collect():
+        rows.setdefault(int(r["coarse"]), []).append((int(r["cell"]), r["carr"]))
+    groups = {
+        g: (
+            np.array([c for c, _ in members], dtype=np.int64),
+            np.array([v for _, v in members], dtype=np.float64),
+        )
+        for g, members in rows.items()
+    }
     # probe only coarse cells that HAVE fine members: the final
     # fine→coarse re-assignment can leave a (recentered) coarse
     # centroid empty, and a vector whose every probed coarse cell is
@@ -648,115 +660,16 @@ def _coarse_model(
     # yields ≥1 candidate and the output keeps one row per vector.
     # The SQL twin applies the same restriction ({p}rd joins the
     # DISTINCT f2c coarse set).
-    used = {
-        int(r["coarse"])
-        for r in fine_map.select("coarse").distinct().collect()
-    }
-    coarse_rows = [
+    used = sorted(
         (int(r["cell"]), [float(x) for x in r["carr"]])
         for r in coarse.collect()
-        if int(r["cell"]) in used
-    ]
+        if int(r["cell"]) in groups
+    )
     return {
-        "coarse_rows": coarse_rows,
-        "fine_map": fine_map,
-        "n_coarse": n_coarse,
+        "ccells": np.array([c for c, _ in used], dtype=np.int64),
+        "coarse": np.array([v for _, v in used], dtype=np.float64),
+        "groups": groups,
     }
-
-
-def _assign_two_level(
-    emb: DataFrame,
-    model: dict,
-    n_probe: int = 1,
-    coarse_probe: int = 2,
-    engine: str = "codegen",
-) -> DataFrame:
-    """(vec_id, cell): two-level centroid assignment — O(kc +
-    coarse_probe·k/kc) ≈ O(√k) distance evaluations per row instead
-    of the flat O(k) scan.
-
-    Stage 1 (ZERO shuffle, pure codegen): each row's *coarse_probe*
-    nearest coarse centroids via a literal struct-array
-    (round(dist2,6), ccell) sorted in-row — array_sort's
-    lexicographic struct order IS the (dist2 asc, cell asc) contract,
-    so any engine reproduces the probe set.  Probing >1 coarse cells
-    recovers rows whose true fine centroid lives just across a coarse
-    bisector — the same boundary-miss knob as IVF multi-probe;
-    APPROXIMATION: a fine centroid outside every probed coarse cell
-    is unreachable (measured recall at the shipped defaults in
-    BENCH/BASELINE.md "Measured recall at scale").
-
-    Stage 2: explode the probed coarse ids (narrow, ×coarse_probe)
-    and broadcast-join the fine→coarse map — candidates stay
-    map-side; the only exchange is ``_nearest_tail``'s N-row argmin
-    aggregation (or WindowGroupLimit top-P for n_probe > 1).
-
-    Expression shape matters (MEASURED): kc separate copies of the
-    dist2 fold (one aggregate-HOF per coarse centroid in one
-    projection) drove Catalyst planning + codegen super-linear — the
-    56-centroid probe sat >8 min in the DRIVER before launching a
-    job.  The shipped form is ONE transform lambda over a literal
-    array-of-arrays (kc × dim literals but a single lambda body),
-    staged as a column before the explode so no consumer duplicates
-    it — planning is milliseconds and the per-row work is the same
-    kc·dim fused fold.
-
-    *engine*: "codegen" (default) is the ORACLE-contract reference —
-    pure built-in expressions, the exact arithmetic the generated SQL
-    twin reproduces.  "arrow" is the measured fast path for bench
-    scale (``_assign_two_level_arrow``): higher-order-function
-    distance folds evaluate INTERPRETED in Spark (CodegenFallback —
-    jstack showed ArrayAggregate.eval dominating the assignment
-    stages), ~10-30 µs per candidate row; the Arrow engine does the
-    same math as numpy batch operations.  Equality of the two engines
-    is pinned by ``test_two_level_engine_parity``."""
-    if engine not in ("codegen", "arrow"):
-        raise ValueError(
-            f"engine={engine!r}: expected 'codegen' or 'arrow' (a typo "
-            "here would silently select the ~100x-slower interpreted "
-            "path)"
-        )
-    if engine == "arrow":
-        return _assign_two_level_arrow(emb, model, n_probe, coarse_probe)
-    coarse_rows = model["coarse_rows"]
-    cp = min(coarse_probe, len(coarse_rows))
-    cents_lit = F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in carr])
-            for _c, carr in coarse_rows
-        ]
-    )
-    ccells_lit = F.array(
-        *[F.lit(int(c)).cast("long") for c, _carr in coarse_rows]
-    )
-    d_arr = F.transform(
-        cents_lit, lambda carr: F.round(_l2_dist2("embedding", carr), 6)
-    )
-    entries = F.zip_with(
-        d_arr,
-        ccells_lit,
-        lambda d, c: F.struct(d.alias("d"), c.alias("c")),
-    )
-    pr = (
-        emb.select(
-            "vec_id",
-            "embedding",
-            F.slice(F.array_sort(entries), 1, cp).alias("_probed"),
-        )
-        .select(
-            "vec_id",
-            "embedding",
-            F.explode(F.transform("_probed", lambda s: s["c"])).alias(
-                "coarse"
-            ),
-        )
-    )
-    d2 = pr.join(F.broadcast(model["fine_map"]), "coarse").select(
-        "vec_id",
-        "cell",
-        F.round(_l2_dist2("embedding", "carr"), 6).alias("dist2"),
-    )
-    return _nearest_tail(d2, n_probe)
 
 
 def _np_round6(a):
@@ -769,8 +682,8 @@ def _np_round6(a):
     CONFIRMED: 0.0005045 → Spark 0.000505, naive floor 0.000504) —
     so near-ties take an exact Decimal fallback.  Ties are measure-
     zero for real-valued distances: the fallback costs nothing in
-    practice and keeps the arrow engine bit-identical to the codegen
-    oracle contract."""
+    practice and keeps the numpy kernels (two-level assignment, ADC
+    scoring) on the same rounding as the SQL oracles' round(…, 6)."""
     import numpy as np
 
     f = a * 1e6
@@ -794,61 +707,46 @@ def _np_round6(a):
     return out / 1e6
 
 
-def _assign_two_level_arrow(
+def _assign_two_level(
     emb: DataFrame,
     model: dict,
     n_probe: int = 1,
     coarse_probe: int = 2,
 ) -> DataFrame:
-    """Vectorized twin of the codegen two-level assignment — the
-    SAME contract (dist2 = Σ(x−c)² in double, rounded 6dp HALF_UP,
-    ties by cell asc), evaluated as numpy batch operations inside
-    ``mapInPandas`` instead of interpreted ArrayAggregate folds.
-    MEASURED motivation: the HOF distance folds are CodegenFallback —
-    interpreted, ~10-30 µs per candidate row — and dominate the
-    assignment stages at bench scale; numpy does the identical
-    arithmetic ~100× faster.  Engine equality is pinned by
-    ``test_two_level_engine_parity``; the ORACLE registry queries keep
-    the codegen engine so the SQL twins stay the reference.
+    """(vec_id, cell): two-level centroid assignment — O(kc +
+    coarse_probe·k/kc) ≈ O(√k) distance evaluations per row instead
+    of the flat O(k) scan.
 
-    The model ships to executors via the task closure: coarse
-    centroids (kc ≤ √k rows) plus the fine→coarse groups (k rows —
-    collected once on the driver; at k beyond ~1M switch the fine
-    stage back to the broadcast-join form)."""
+    Per row: the *coarse_probe* nearest coarse centroids, then the
+    *n_probe* nearest fine centroids among the probed coarse cells'
+    members.  Contract: dist2 = Σ(x−c)² in double, rounded 6dp
+    HALF_UP (``_np_round6``), ties by cell asc — the arithmetic the
+    generated SQL twin (``queries._sql_assign_two_level``)
+    reproduces.  Probing >1 coarse cells recovers rows whose true fine
+    centroid lives just across a coarse bisector — the same
+    boundary-miss knob as IVF multi-probe; APPROXIMATION: a fine
+    centroid outside every probed coarse cell is unreachable
+    (measured recall at the shipped defaults in BENCH/BASELINE.md
+    "Measured recall at scale").
+
+    Evaluated as numpy batch operations inside ``mapInPandas``
+    (MEASURED: the equivalent higher-order-function folds run
+    interpreted in Spark — CodegenFallback, ~10-30 µs per candidate
+    row — ~100× slower).  Zero shuffle: the model ships in the task
+    closure (see ``_coarse_model``)."""
     import numpy as np
 
-    coarse_rows = model["coarse_rows"]
-    cp = min(coarse_probe, len(coarse_rows))
-    C = np.array([carr for _c, carr in coarse_rows], dtype=np.float64)
-    ccells = np.array([c for c, _carr in coarse_rows], dtype=np.int64)
-    by_coarse: dict[int, tuple] = {}
-    for r in model["fine_map"].collect():
-        by_coarse.setdefault(int(r["coarse"]), []).append(
-            (int(r["cell"]), r["carr"])
-        )
-    by_coarse = {
-        g: (
-            np.array([c for c, _ in rows], dtype=np.int64),
-            np.array([v for _, v in rows], dtype=np.float64),
-        )
-        for g, rows in by_coarse.items()
-    }
-
-    _round6 = _np_round6
-
-    # r8: sort the coarse axis by cell id once — a STABLE argsort over a
-    # distance row is then exactly the per-row lexsort((ccells, dist))
-    # (ties by cell ascending), and it vectorizes across the chunk.
-    _ord = np.argsort(ccells, kind="stable")
-    C = C[_ord]
-    ccells = ccells[_ord]
+    C = model["coarse"]
+    ccells = model["ccells"]
+    groups = model["groups"]
+    cp = min(coarse_probe, len(ccells))
 
     def run(batches):
         import pandas as pd
 
         # r8: chunk the coarse-distance broadcast — (rows × kc × dim)
         # float64 temporaries scale with the Arrow batch size (371 MB
-        # at 4096 rows × kc≈180), which measurably slowed the engine
+        # at 4096 rows × kc≈180), which measurably slowed the kernel
         # when the session default batch grew; 512-row chunks bound the
         # temporary at ~46 MB with bit-identical per-row arithmetic.
         CH = 512
@@ -862,28 +760,24 @@ def _assign_two_level_arrow(
             out_ids, out_cells = [], []
             for s in range(0, len(ids), CH):
                 Xc = X[s : s + CH]
-                Dc = _round6(((Xc[:, None, :] - C[None, :, :]) ** 2).sum(-1))
+                Dc = _np_round6(((Xc[:, None, :] - C[None, :, :]) ** 2).sum(-1))
+                # the coarse axis is sorted by cell id, so a STABLE
+                # argsort of a distance row is exactly the per-row
+                # lexsort((ccells, dist)) — ties by cell ascending
                 probe = np.argsort(Dc, axis=1, kind="stable")[:, :cp]
                 for j in range(len(Xc)):
                     i = s + j
-                    cand_cells, cand_d = [], []
-                    for g in ccells[probe[j]]:
-                        grp = by_coarse.get(int(g))
-                        if grp is None:
-                            continue
-                        gc, gv = grp
-                        cand_cells.append(gc)
-                        cand_d.append(_round6(((X[i] - gv) ** 2).sum(-1)))
-                    if not cand_cells:
-                        continue
-                    cand_cells = np.concatenate(cand_cells)
-                    cand_d = np.concatenate(cand_d)
+                    gs = [groups[int(g)] for g in ccells[probe[j]]]
+                    cand_cells = np.concatenate([gc for gc, _gv in gs])
+                    cand_d = np.concatenate(
+                        [_np_round6(((X[i] - gv) ** 2).sum(-1)) for _gc, gv in gs]
+                    )
                     best = np.lexsort((cand_cells, cand_d))[:n_probe]
-                    for b in best:
-                        out_ids.append(ids[i])
-                        out_cells.append(cand_cells[b])
+                    out_ids.extend([ids[i]] * len(best))
+                    out_cells.extend(cand_cells[best])
             yield pd.DataFrame({"vec_id": out_ids, "cell": out_cells})
 
+    ensure_py_deps(emb.sparkSession)  # run() calls _np_round6 by reference
     return emb.select("vec_id", "embedding").mapInPandas(
         run, "vec_id long, cell long"
     )
@@ -899,7 +793,6 @@ def kmeans_cells(
     two_level: bool = False,
     coarse_probe: int = 2,
     coarse_iters: int = 1,
-    engine: str = "codegen",
 ) -> DataFrame:
     """Lloyd-trained IVF assignment: final (vec_id, cell) under the
     trained centroids (see ``_kmeans_centroids``).  *sample_cap* /
@@ -915,7 +808,6 @@ def kmeans_cells(
         two_level=two_level,
         coarse_probe=coarse_probe,
         coarse_iters=coarse_iters,
-        engine=engine,
     )(1)
 
 
@@ -929,7 +821,6 @@ def _kmeans_assigner(
     two_level: bool = False,
     coarse_probe: int = 2,
     coarse_iters: int = 1,
-    engine: str = "codegen",
 ):
     """Train the quantizer ONCE and return ``assign(n_probe)`` — so a
     consumer needing both the primary assignment and a multi-probe
@@ -944,14 +835,13 @@ def _kmeans_assigner(
         two_level=two_level,
         coarse_probe=coarse_probe,
         coarse_iters=coarse_iters,
-        engine=engine,
     )
     if not two_level:
         return lambda n_probe=1: _assign_to(emb, cents, n_probe)
     model = _coarse_model(cents, n_cells, dim, coarse_iters)
 
     def assign(n_probe: int = 1) -> DataFrame:
-        out = _assign_two_level(emb, model, n_probe, coarse_probe, engine)
+        out = _assign_two_level(emb, model, n_probe, coarse_probe)
         # a two-level assignment is 10-20 s of real work at 100k rows
         # (MEASURED); semantic_dedup consumes the primary assignment
         # from three places (capped index, probe side, final join) and
@@ -1038,7 +928,6 @@ def _kmeans_centroids(
     coarse_probe: int = 2,
     coarse_iters: int = 1,
     init_by_rank: bool | None = None,
-    engine: str = "codegen",
 ) -> DataFrame:
     """Lloyd-trained centroids: *iters* rounds of assign → mean
     recentering (centroid coordinates rounded 6dp each round so any
@@ -1089,24 +978,19 @@ def _kmeans_centroids(
     cents_persisted = n_cells > LITERAL_CENTS_MAX
     cents = _materialize_cents(init, n_cells)
     for _ in range(iters):
-        round_model = None
         if two_level:
-            round_model = _coarse_model(cents, n_cells, dim, coarse_iters)
             assign = _assign_two_level(
                 train,
-                round_model,
+                _coarse_model(cents, n_cells, dim, coarse_iters),
                 coarse_probe=coarse_probe,
-                engine=engine,
             )
         else:
             assign = _assign_to(train, cents)
         new_cents = _materialize_cents(_recenter(train, assign, dim), n_cells)
-        # release the superseded round's cached frames (review r7: a
+        # release the superseded round's cached frame (review r7: a
         # 100k→1M sweep accumulated dead k-row frames in executor
         # storage); new_cents is already materialized, so the only
         # cost of eviction-after-unpersist is a recompute
-        if round_model is not None:
-            round_model["fine_map"].unpersist()
         if cents_persisted:
             cents.unpersist()
         cents = new_cents
@@ -1127,7 +1011,6 @@ def ivf_kmeans_topk(
     two_level: bool = False,
     coarse_probe: int = 2,
     coarse_iters: int = 1,
-    engine: str = "codegen",
 ) -> DataFrame:
     """IVF probe over Lloyd-trained cells — sim4's probe with trained
     centroids instead of the first-k quantizer; *n_probe* > 1 probes
@@ -1142,7 +1025,6 @@ def ivf_kmeans_topk(
         two_level=two_level,
         coarse_probe=coarse_probe,
         coarse_iters=coarse_iters,
-        engine=engine,
     )
     cells = assign(1)
     probes = assign(n_probe) if n_probe > 1 else None
@@ -1211,9 +1093,10 @@ def _pq_best_struct(
     sub_col: F.Column, book: list[tuple[int, list[float]]]
 ) -> F.Column:
     """struct(d, c) of the nearest codebook centroid for one subspace
-    — the coarse-probe expression shape (ONE transform lambda over a
-    literal array-of-arrays; kc copies of the fold blow up
-    planning), argmin via array_sort's lexicographic struct order
+    — ONE transform lambda over a literal array-of-arrays (MEASURED:
+    one fold copy per centroid in a single projection drove Catalyst
+    planning super-linear — a 56-centroid probe sat >8 min in the
+    driver), argmin via array_sort's lexicographic struct order
     (dist2 asc, code asc)."""
     cb_lit = F.array(
         *[F.array(*[F.lit(float(x)) for x in carr]) for _c, carr in book]
@@ -1282,7 +1165,6 @@ def pq_adc_topk(
     iters: int = 1,
     dim: int = EMB_DIM,
     queries: DataFrame | None = None,
-    engine: str = "codegen",
 ) -> DataFrame:
     """Asymmetric-distance PQ search: top-k neighbors for vec_id <
     *n_queries* scored against CODES, not vectors — adc(q, v) =
@@ -1290,88 +1172,29 @@ def pq_adc_topk(
     6dp-rounded (the module's engine-agnostic distance contract).
     Rank by (adc asc, neighbor asc), self excluded.
 
-    Plan: encode is the zero-shuffle literal-codebook projection;
-    queries broadcast with their raw embeddings; the per-pair score is
-    a literal lookup — ``element_at(codebook_lit, code+1)`` — plus a
-    d/m-dim fold per subspace, all codegen; the only exchange is the
-    top-k window.  At scale, compose with the IVF cell as partition
-    key (IVFPQ) so a probe scans one cell's codes; the ADC scan reads
-    8-byte codes instead of 256-byte vectors — the 32× memory win is
-    the point.  Returns (query_id, neighbor_id, rank, adc).
+    Plan: encode is the zero-shuffle literal-codebook projection; the
+    query vectors (tiny) are collected once and every code row is
+    scored against all of them by ``_pq_adc_scores`` — the FAISS
+    table-based scan: m table gathers per pair, no per-pair distance
+    arithmetic; the only exchange is the top-k window.  At scale,
+    compose with the IVF cell as partition key (IVFPQ) so a probe
+    scans one cell's codes; the ADC scan reads 8-byte codes instead of
+    256-byte vectors — the 32× memory win is the point.  Returns
+    (query_id, neighbor_id, rank, adc).
 
     *queries* overrides the default vec_id < n_queries query set (any
     (vec_id, embedding) frame — the recall bench probes a sampled id
-    set).  *engine*: "codegen" (default, the oracle contract) scores
-    each pair with n_sub literal-lookup folds; "arrow"
-    (``_pq_adc_scores_arrow``) is the FAISS-style table-based scan —
-    per task the query→centroid DISTANCE TABLE (q × m × k, the same
-    6dp-rounded terms) is computed ONCE in numpy, and each pair is m
-    table GATHERS, no per-pair arithmetic at all — the form an ADC
-    scan takes at 100 TB.  Engine equality pinned by
-    ``test_pq_adc_engine_parity``."""
-    if engine not in ("codegen", "arrow"):
-        raise ValueError(f"engine={engine!r}: expected 'codegen' or 'arrow'")
+    set)."""
     d_sub = dim // n_sub
     books = pq_codebooks(emb, n_sub, k, iters, dim)
     codes = pq_encode(emb, n_sub, k, iters, dim, codebooks=books)
     src_q = queries if queries is not None else emb.filter(
         F.col("vec_id") < n_queries
     )
-    q = src_q.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
-    )
-    if engine == "arrow":
-        q_rows = [
-            (int(r["query_id"]), [float(x) for x in r["_qv"]])
-            for r in q.collect()
-        ]
-        scored = _pq_adc_scores_arrow(codes, q_rows, books, d_sub)
-        return _rank_adc(scored, k_neighbors)
-    terms = _pq_adc_terms("_qv", "codes", books, d_sub)
-    scored = (
-        codes.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(sum(terms[1:], terms[0]), 6).alias("adc"),
-        )
+    scored = _pq_adc_scores(
+        codes.select("vec_id", "codes"), src_q, books, d_sub
     )
     return _rank_adc(scored, k_neighbors)
-
-
-def _pq_adc_terms(
-    qv_col: str, codes_col: str, books: list, d_sub: int
-) -> list[F.Column]:
-    """Per-subspace ADC term expressions — round(‖q_s −
-    codebook_s[code_s]‖², 6) via literal codebook lookup (positional
-    LUT: codebooks are sorted by code but codes need not be dense).
-    ONE copy behind pq_adc_topk's codegen engine and ivfpq_topk."""
-    terms = []
-    for s, book in enumerate(books):
-        cb_lit = F.array(
-            *[F.array(*[F.lit(float(x)) for x in carr]) for _c, carr in book]
-        )
-        code_positions = {c: i for i, (c, _v) in enumerate(book)}
-        pos_lut = F.array(
-            *[
-                F.lit(code_positions.get(code, -1))
-                for code in range(max(code_positions) + 1)
-            ]
-        )
-        pos = F.element_at(
-            pos_lut, (F.element_at(codes_col, s + 1) + 1).cast("int")
-        )
-        terms.append(
-            F.round(
-                _l2_dist2(
-                    F.slice(qv_col, s * d_sub + 1, d_sub),
-                    F.element_at(cb_lit, pos + 1),
-                ),
-                6,
-            )
-        )
-    return terms
 
 
 def ivfpq_topk(
@@ -1399,12 +1222,14 @@ def ivfpq_topk(
     Shape: ONE Lloyd training feeds both the primary assignment
     (capped index side, ``capped_index`` cell cap) and the query-side
     multi-probe; PQ encode is the zero-shuffle literal-codebook
-    projection; ADC terms are literal lookups per candidate; the only
-    exchanges are the assignment argmins and the final top-k window.
-    Every neighbor has one primary cell, so a (query, neighbor) pair
-    arises from at most one probed cell — no distinct.  Returns
-    (query_id, neighbor_id, rank, adc); exact 6dp/rounding contract
-    throughout, so the DuckDB twin reproduces it."""
+    projection; each candidate pair is scored by ``_pq_adc_scores``
+    (the same distance tables and gathers as ``pq_adc_topk``); the
+    only exchanges are the assignment argmins, the candidate join and
+    the final top-k window.  Every neighbor has one primary cell, so a
+    (query, neighbor) pair arises from at most one probed cell — no
+    distinct.  Returns (query_id, neighbor_id, rank, adc); exact
+    6dp/rounding contract throughout, so the DuckDB twin reproduces
+    it."""
     d_sub = dim // n_sub
     assign = _kmeans_assigner(emb, n_cells, cell_iters, dim)
     cells = assign(1)
@@ -1414,29 +1239,23 @@ def ivfpq_topk(
     idx = capped_index(cells, ["cell"], "vec_id", cell_cap).join(
         codes, "vec_id"
     )
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
+    cand = probes.select(F.col("vec_id").alias("query_id"), "cell").join(
+        idx, "cell"
     )
-    cand = (
-        probes.select(F.col("vec_id").alias("query_id"), "cell")
-        .join(F.broadcast(q), "query_id")
-        .join(idx, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-    )
-    terms = _pq_adc_terms("_qv", "codes", books, d_sub)
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(sum(terms[1:], terms[0]), 6).alias("adc"),
+    scored = _pq_adc_scores(
+        cand.select("query_id", "vec_id", "codes"),
+        emb.filter(F.col("vec_id") < n_queries),
+        books,
+        d_sub,
     )
     return _rank_adc(scored, k_neighbors)
 
 
 def _rank_adc(scored: DataFrame, k_neighbors: int) -> DataFrame:
-    """ONE ranking tail for both ADC engines (rank by adc asc,
+    """ONE ranking tail for both ADC searches (rank by adc asc,
     neighbor-id ties, top-k) — a tie-break or cast change here reaches
-    codegen and arrow together, so the engines cannot drift apart
-    (review r7; the _rank_scored pattern)."""
+    ``pq_adc_topk`` and ``ivfpq_topk`` together (review r7; the
+    _rank_scored pattern)."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc").asc(), F.col("neighbor_id").asc()
     )
@@ -1447,47 +1266,46 @@ def _rank_adc(scored: DataFrame, k_neighbors: int) -> DataFrame:
     )
 
 
-def _pq_adc_scores_arrow(
-    codes: DataFrame,
-    q_rows: list[tuple[int, list[float]]],
+def _pq_adc_scores(
+    rows: DataFrame,
+    queries: DataFrame,
     books: list,
     d_sub: int,
 ) -> DataFrame:
-    """(query_id, neighbor_id, adc) for every (query, code-row) pair —
-    the table-based ADC scan: per task, the query→centroid distance
-    table (q × m × k, terms 6dp-rounded exactly like the codegen
-    engine) is computed ONCE; scoring a pair is then m table gathers
-    + a sum, with no per-pair distance arithmetic (the FAISS ADC
-    shape).  Queries and codebooks ship via the task closure (both
-    tiny)."""
+    """(query_id, neighbor_id, adc), self pairs excluded — the ONE ADC
+    scorer, a table-based scan: the query→centroid distance tables
+    (q × m × k, each term round(‖q_s − c‖², 6)) are computed ONCE on
+    the driver, and scoring a pair is then m table gathers + a sum,
+    with no per-pair distance arithmetic (the FAISS ADC shape).  The
+    (vec_id, embedding) *queries* are collected (a small query set)
+    and ship with the codebooks via the task closure.
+
+    *rows* is either (vec_id, codes) — every row scored against every
+    query (``pq_adc_topk``'s full scan) — or (query_id, vec_id,
+    codes) — each row scored against its own query only
+    (``ivfpq_topk``'s probe-pruned candidates)."""
     import numpy as np
 
-    q_ids = np.array([qid for qid, _ in q_rows], dtype=np.int64)
-    Q = np.array([v for _, v in q_rows], dtype=np.float64)
+    paired = "query_id" in rows.columns
+    q_rows = queries.select("vec_id", "embedding").collect()
+    q_ids = np.array([r["vec_id"] for r in q_rows], dtype=np.int64)
     m = len(books)
-    cents = [
-        np.array([v for _c, v in books[s]], dtype=np.float64)
-        for s in range(m)
-    ]
-    luts = []
-    for s in range(m):
-        lut = np.full(max(c for c, _v in books[s]) + 1, -1, dtype=np.int64)
-        for i, (c, _v) in enumerate(books[s]):
+    Q = np.array([r["embedding"] for r in q_rows], dtype=np.float64).reshape(
+        len(q_rows), m * d_sub
+    )
+    # distance tables: DT[s][qi, code_pos] = round(||q_s - cent||^2, 6),
+    # and per-subspace code → position LUTs (codebooks are sorted by
+    # code, but codes need not be dense)
+    DT, luts = [], []
+    for s, book in enumerate(books):
+        cents = np.array([v for _c, v in book], dtype=np.float64)
+        Qs = Q[:, s * d_sub : (s + 1) * d_sub]
+        DT.append(_np_round6(((Qs[:, None, :] - cents[None, :, :]) ** 2).sum(-1)))
+        lut = np.full(max(c for c, _v in book) + 1, -1, dtype=np.int64)
+        for i, (c, _v) in enumerate(book):
             lut[c] = i
         luts.append(lut)
-    # distance tables: DT[s][qi, code_pos] = round(||q_s - cent||^2, 6)
-    DT = [
-        _np_round6(
-            (
-                (
-                    Q[:, s * d_sub : (s + 1) * d_sub][:, None, :]
-                    - cents[s][None, :, :]
-                )
-                ** 2
-            ).sum(-1)
-        )
-        for s in range(m)
-    ]
+    q_order = np.argsort(q_ids)
 
     def run(batches):
         import pandas as pd
@@ -1495,28 +1313,27 @@ def _pq_adc_scores_arrow(
         for pdf in batches:
             if not len(pdf):
                 continue
-            ids = pdf["vec_id"].to_numpy()
-            cm = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["codes"]]
-            )
-            total = np.zeros((len(q_ids), len(ids)), dtype=np.float64)
+            nn = pdf["vec_id"].to_numpy()
+            cm = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
+            if paired:
+                qq = pdf["query_id"].to_numpy()
+                qi = q_order[np.searchsorted(q_ids[q_order], qq)]
+            else:
+                # (q, 1) against (n,) broadcasts to every (query, row) pair
+                qi = np.arange(len(q_ids))[:, None]
+                qq = np.repeat(q_ids, len(nn))
+                nn = np.tile(nn, len(q_ids))
+            total = np.zeros(np.broadcast_shapes(qi.shape, cm.shape[:1]))
             for s in range(m):
-                total += DT[s][:, luts[s][cm[:, s]]]
-            adc = _np_round6(total)
-            qq = np.repeat(q_ids, len(ids))
-            nn = np.tile(ids, len(q_ids))
+                total += DT[s][qi, luts[s][cm[:, s]]]
+            adc = _np_round6(total).ravel()
             keep = qq != nn
             yield pd.DataFrame(
-                {
-                    "query_id": qq[keep],
-                    "neighbor_id": nn[keep],
-                    "adc": adc.ravel()[keep],
-                }
+                {"query_id": qq[keep], "neighbor_id": nn[keep], "adc": adc[keep]}
             )
 
-    return codes.select("vec_id", "codes").mapInPandas(
-        run, "query_id long, neighbor_id long, adc double"
-    )
+    ensure_py_deps(rows.sparkSession)  # run() calls _np_round6 by reference
+    return rows.mapInPandas(run, "query_id long, neighbor_id long, adc double")
 
 
 def lsh_buckets(emb: DataFrame, planes: list[list[float]] | None = None) -> DataFrame:

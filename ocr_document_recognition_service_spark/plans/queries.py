@@ -2835,9 +2835,9 @@ def emb2_pq_encode(spark: SparkSession, sf: str) -> DataFrame:
     "sim8_pq_adc",
     _sim8_sql(),
     "PQ asymmetric-distance search (ADC, r7): queries score against "
-    "CODES via literal codebook lookups — per pair 8 lookups + "
-    "8-dim folds instead of a 64-dim vector read (the 32x memory/"
-    "bandwidth win); rank by rounded ADC asc, neighbor-id ties",
+    "CODES via per-query distance tables — per pair 8 table gathers "
+    "instead of a 64-dim vector read (the 32x memory/bandwidth win); "
+    "rank by rounded ADC asc, neighbor-id ties",
 )
 def sim8_pq_adc(spark: SparkSession, sf: str) -> DataFrame:
     return similarity.pq_adc_topk(

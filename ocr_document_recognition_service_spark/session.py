@@ -41,6 +41,12 @@ def build_session(
         # threshold bounds the per-partition build side to 128 MB, so
         # the OOM risk SHJ trades for speed stays capped on a cluster
         # (same setting, executor-memory-scaled, in a real profile).
+        # That bound exists ONLY under AQE: a shuffled-hash join that
+        # the static planner picks (AQE off, or size stats that
+        # underestimate the build side) has no 128 MB cap and, unlike
+        # sort-merge, cannot spill its build side.  This setting is
+        # safe only while spark.sql.adaptive.enabled stays "true" above
+        # — an ``extra`` override that turns AQE off must also drop it.
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",

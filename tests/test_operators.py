@@ -260,6 +260,32 @@ def test_sessionize_fractional_gap_matches_duckdb_oracle(
     assert got == want == [(1, 2, 2), (2, 1, 2), (3, 2, 4)]
 
 
+@pytest.mark.parametrize("name", ["sim8_pq_adc", "sim9_ivfpq"])
+def test_adc_queries_match_duckdb_oracle(spark, name):
+    """The registry's PQ-ADC queries run the numpy ADC scorer; their
+    rows must hash equal to the DuckDB ``oracle_sql()`` twin's, the
+    same row count + value-hash check as ``tools/check_contract.py``."""
+    duckdb = pytest.importorskip("duckdb")
+    from ocr_document_recognition_service_spark.plans.queries import (
+        REGISTRY,
+        oracle_sql,
+    )
+    from tools.check_contract import frame_hash
+
+    sdf = REGISTRY[name].spark(spark, SF)
+    srows = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{SF}/embeddings.parquet')"
+    )
+    res = con.execute(oracle_sql()[name])
+    dcols = [d[0] for d in res.description]
+    drows = res.fetchall()
+    assert len(srows) == len(drows) > 0
+    assert frame_hash(sdf.columns, srows)[0] == frame_hash(dcols, drows)[0]
+
+
 def test_lsh_probe_candidates_bounded_under_skew(spark):
     """A degenerate corpus (every vector identical → ONE bucket per
     table) must not go quadratic: with a bucket cap, per-query fan-out
@@ -1390,14 +1416,16 @@ def test_ivfpq_finds_cluster_mates_and_prunes(spark):
         assert cells[r["neighbor_id"]] in probed[r["query_id"]]
 
 
-def test_pq_adc_engine_parity(spark):
-    """The table-based Arrow ADC scan (FAISS shape: per-task distance
-    tables, per-pair gathers) and the codegen literal-lookup engine
-    implement ONE scoring contract — identical (query, neighbor,
-    rank, adc) output, including a custom query frame."""
+def test_pq_adc_matches_python_reference(spark):
+    """The table-based ADC scan against a plain-Python reference over
+    the same ``pq_codebooks``/``pq_encode`` output: each subspace term
+    ‖q_s − codebook_s[code_s]‖² and the sum are Decimal HALF_UP to
+    6 dp (Spark/DuckDB ``round(…, 6)``), ranked by (adc asc, neighbor
+    asc), self excluded.  Covers ``pq_adc_topk`` with a custom query
+    frame and ``ivfpq_topk`` with every cell probed and no cell cap,
+    where the probe-pruned candidate set is the whole corpus."""
     import random as _r
-
-    from pyspark.sql import functions as F
+    from decimal import ROUND_HALF_UP, Decimal
 
     rng = _r.Random(23)
     rows = [
@@ -1405,20 +1433,47 @@ def test_pq_adc_engine_parity(spark):
         for i in range(150)
     ]
     emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
+    books = similarity.pq_codebooks(emb, n_sub=8, k=16, iters=1)
+    codes = {
+        r["vec_id"]: list(r["codes"])
+        for r in similarity.pq_encode(emb, codebooks=books).collect()
+    }
+    vecs = {r["vec_id"]: list(r["embedding"]) for r in emb.collect()}
+    q6 = Decimal("0.000001")
+
+    def r6(x):
+        return Decimal(repr(x)).quantize(q6, rounding=ROUND_HALF_UP)
+
+    def adc(q, v):
+        total = Decimal(0)
+        for s, book in enumerate(books):
+            cent = dict(book)[codes[v][s]]
+            qs = vecs[q][s * 8 : (s + 1) * 8]
+            total += r6(sum((a - b) * (a - b) for a, b in zip(qs, cent)))
+        return float(total.quantize(q6, rounding=ROUND_HALF_UP))
+
+    def reference(qids, k):
+        out = []
+        for q in qids:
+            ranked = sorted((adc(q, v), v) for v in vecs if v != q)
+            out += [(q, v, i + 1, d) for i, (d, v) in enumerate(ranked[:k])]
+        return sorted(out)
+
     qs = emb.filter(F.col("vec_id") % 17 == 3)
-    a = sorted(
+    got = sorted(
         tuple(r)
-        for r in similarity.pq_adc_topk(
-            emb, k_neighbors=3, queries=qs, engine="codegen"
+        for r in similarity.pq_adc_topk(emb, k_neighbors=3, queries=qs).collect()
+    )
+    assert got == reference([v for v in vecs if v % 17 == 3], 3)
+
+    got = sorted(
+        tuple(r)
+        for r in similarity.ivfpq_topk(
+            emb, n_queries=6, k_neighbors=3, n_cells=8, n_probe=8,
+            cell_cap=None,
         ).collect()
     )
-    b = sorted(
-        tuple(r)
-        for r in similarity.pq_adc_topk(
-            emb, k_neighbors=3, queries=qs, engine="arrow"
-        ).collect()
-    )
-    assert a == b and len(a) > 0
+    assert got == reference(range(6), 3)
 
 
 def test_embedding_dup_multi_table_superset(spark):
@@ -1784,7 +1839,10 @@ def test_two_level_assignment_exact_when_coarse_covers(spark):
     """Two-level assignment with coarse_probe ≥ n_coarse degenerates
     to the flat scan EXACTLY (every fine cell reachable), on arbitrary
     data — so the approximation is isolated to coarse truncation, and
-    the k ≤ coarse_probe·k/kc regime is safe to switch over."""
+    the k ≤ coarse_probe·k/kc regime is safe to switch over.  The flat
+    ``_assign_to`` is a separate Spark-expression path, so this also
+    checks the numpy kernel, primary and multi-probe, on uniform and
+    on clustered + noise data."""
     import random as _r
 
     rng = _r.Random(77)
@@ -1805,6 +1863,36 @@ def test_two_level_assignment_exact_when_coarse_covers(spark):
         ).collect()
     }
     assert flat == two
+
+    rng = _r.Random(21)
+    rows = []
+    vid = 0
+    for c in range(12):  # 12 loose clusters + noise rows
+        base = [rng.uniform(-1, 1) for _ in range(64)]
+        for _ in range(10):
+            rows.append(
+                (vid, [round(x + rng.uniform(-0.05, 0.05), 4) for x in base])
+            )
+            vid += 1
+    for _ in range(40):
+        rows.append((vid, [round(rng.uniform(-1, 1), 4) for _ in range(64)]))
+        vid += 1
+    emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
+    cents = similarity._kmeans_centroids(emb, 12, 1, sample_cap=100)
+    model = similarity._coarse_model(cents, 12, 64, 1)
+    # n_cells=12 → n_coarse=4; coarse_probe=4 probes every coarse cell
+    for n_probe in (1, 2):
+        flat = sorted(
+            tuple(r)
+            for r in similarity._assign_to(emb, cents, n_probe).collect()
+        )
+        two = sorted(
+            tuple(r)
+            for r in similarity._assign_two_level(
+                emb, model, n_probe, 4
+            ).collect()
+        )
+        assert flat == two and len(two) == n_probe * len(rows), n_probe
 
 
 def test_two_level_matches_flat_on_separated_clusters(spark):
@@ -1844,7 +1932,7 @@ def test_np_round6_matches_spark_half_up(spark):
     """r7 review CONFIRMED: naive floor(x*1e6+0.5) diverges from
     Spark's round(double, 6) — BigDecimal HALF_UP on the SHORTEST
     decimal repr — on ~.5e-6 boundary values (0.0005045 → Spark
-    0.000505, naive 0.000504).  The arrow engine's _np_round6 must
+    0.000505, naive 0.000504).  The numpy kernels' _np_round6 must
     match Spark exactly, fast path and Decimal fallback both."""
     import numpy as np
     from pyspark.sql import functions as F
@@ -1864,46 +1952,6 @@ def test_np_round6_matches_spark_half_up(spark):
         assert got[i] == want[f"c{i}"], (
             f"{v!r}: arrow {got[i]!r} != spark {want[f'c{i}']!r}"
         )
-
-
-def test_two_level_engine_parity(spark):
-    """The Arrow (numpy mapInPandas) engine and the codegen (HOF
-    expression) engine implement ONE assignment contract: identical
-    (vec_id, cell) output — primary and multi-probe — on clustered +
-    noise data.  The codegen engine is the oracle reference; benches
-    run arrow; this weld keeps them the same operator."""
-    import random as _r
-
-    rng = _r.Random(21)
-    rows = []
-    vid = 0
-    for c in range(12):  # 12 loose clusters + noise rows
-        base = [rng.uniform(-1, 1) for _ in range(64)]
-        for _ in range(10):
-            rows.append(
-                (vid, [round(x + rng.uniform(-0.05, 0.05), 4) for x in base])
-            )
-            vid += 1
-    for _ in range(40):
-        rows.append((vid, [round(rng.uniform(-1, 1), 4) for _ in range(64)]))
-        vid += 1
-    emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    cents = similarity._kmeans_centroids(emb, 12, 1, sample_cap=100)
-    model = similarity._coarse_model(cents, 12, 64, 1)
-    for n_probe in (1, 2):
-        cg = sorted(
-            tuple(r)
-            for r in similarity._assign_two_level(
-                emb, model, n_probe, 2, engine="codegen"
-            ).collect()
-        )
-        ar = sorted(
-            tuple(r)
-            for r in similarity._assign_two_level(
-                emb, model, n_probe, 2, engine="arrow"
-            ).collect()
-        )
-        assert cg == ar, f"engine divergence at n_probe={n_probe}"
 
 
 def test_hash_order_sample_contract(spark):

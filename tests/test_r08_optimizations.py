@@ -193,3 +193,26 @@ def test_simhash_bits_packed_parity_wide(spark):
                     sums[k] += 1 if bit == 1 else -1
             expect = sum(2**k for k in range(n_bits) if sums[k] > 0)
             assert got[doc_id] == expect, (n_bits, doc_id)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_q1_money_columns_have_two_decimals(sf):
+    """q1_pricing_summary sums money as longs scaled by 10⁴,
+    trunc(x·10⁴ + 0.5), which equals its oracle's decimal(18,4)
+    HALF_UP cast only while every value has at most 2 decimals (x·10⁴
+    then sits far from any .5 boundary).  A data generator that adds
+    decimals must fail here instead of silently shifting the sums."""
+    import os
+
+    import numpy as np
+    import pyarrow.parquet as pq
+    from conftest import SF_DIR
+
+    cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
+    path = os.path.join(os.path.dirname(SF_DIR), sf, "lineitem.parquet")
+    t = pq.read_table(path, columns=cols)
+    assert t.num_rows > 0
+    for c in cols:
+        x = t.column(c).to_numpy()
+        off = x[np.round(x, 2) != x]
+        assert not len(off), f"{sf} {c}: {off[:5]}"

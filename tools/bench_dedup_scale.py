@@ -121,8 +121,8 @@ def main() -> int:
 
         # dd10 SemDeDup at the AT-SCALE quantizer config (r6 verdict
         # #1): cells = N/32 (headroom rule), two-level O(sqrt k)/row
-        # assignment (Arrow engine; 64*k sample rule clips at N at this
-        # sizing, so training is full-corpus), probe-side
+        # assignment (64*k sample rule clips at N at this sizing, so
+        # training is full-corpus), probe-side
         # n_probe=2.  The r6 flat quantizer was O(N·k) = O(N²/32) here
         # — this leg is the direct evidence the rewrite scales.
         # cap = 4x mean cell and coarse_probe=3 — the recall-measured
@@ -134,7 +134,6 @@ def main() -> int:
             dedup.semantic_dedup(
                 emb, n_cells=k10, iters=1, threshold=0.99, cell_cap=128,
                 n_probe=2, sample_cap=None, two_level=True, coarse_probe=3,
-                engine="arrow",
             )
             .filter("is_dup")
             .count()
@@ -189,7 +188,7 @@ joins as shipped (bucket_cap=64; dd5 hyperplanes auto-scaled via
 planes_for_corpus so expected bucket size stays constant).  Pairs/doc
 stays ~flat from 100k to 1M docs — the candidate volume scales with
 the corpus, not its square (asserted <= 2x drift).  dd10 runs the r7
-AT-SCALE SemDeDup config (cells = N/32, two-level Arrow-engine
+AT-SCALE SemDeDup config (cells = N/32, two-level numpy
 assignment — full-corpus Lloyd: the 64-per-centroid sample rule
 clips at N at this sizing — cap=128=4x-mean, coarse_probe=3, P=2) — its per-N wall growth factor
 vs perfectly-linear is {dd10_growth}x across this sweep (the r6 flat

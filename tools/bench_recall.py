@@ -270,8 +270,9 @@ def pair_recall_table(spark):
     # is_dup.  Cells sized by the headroom rule N/(cap/2).  r7: runs
     # the AT-SCALE quantizer exactly as a 100 TB deployment would —
     # hash-order sampled Lloyd training, two-level O(sqrt k)/row
-    # assignment (Arrow engine, parity-pinned to the oracle codegen
-    # engine), and probe-side multi-assignment n_probe=2 (the r6
+    # assignment (the numpy kernel the sim7 registry query checks
+    # against its DuckDB twin), and probe-side multi-assignment
+    # n_probe=2 (the r6
     # verdict's recall knob for mates split across a cell wall).
     # r6 flat/probe-1 history: recall 0.933 at 395 s.
     # cell_cap = 4x the mean cell (128 at mean 32): this tool MEASURED
@@ -289,7 +290,6 @@ def pair_recall_table(spark):
         # through the driver's TakeOrdered merge — train on the full
         # corpus (sample_cap is the knob for fixed-k << N/64 regimes)
         n_probe=2, sample_cap=None, two_level=True, coarse_probe=3,
-        engine="arrow",
     )
     flagged = {
         r["vec_id"]
@@ -417,7 +417,6 @@ def ann_recall_table(spark):
             lambda: similarity.ivf_kmeans_topk(
                 emb, n_cells=n_cells, iters=1, k=10, cell_cap=64,
                 n_probe=2, sample_cap=None, two_level=True,
-                engine="arrow",
             ),
         ),
         (
@@ -425,8 +424,8 @@ def ann_recall_table(spark):
             # ADC ranks by L2 to the reconstruction; over L2-NORMALIZED
             # vectors that ordering is cosine-equivalent, so the
             # cosine-truth recall is a fair measure (the standard
-            # normalize-for-cosine PQ deployment).  Arrow engine =
-            # per-task distance tables + gathers (the FAISS scan).
+            # normalize-for-cosine PQ deployment).  Scored as
+            # distance tables + gathers (the FAISS scan).
             lambda: similarity.pq_adc_topk(
                 _normalized(emb),
                 k_neighbors=10,
@@ -434,7 +433,6 @@ def ann_recall_table(spark):
                 k=64,
                 iters=1,
                 queries=_normalized(queries),
-                engine="arrow",
             ),
         ),
     ]
@@ -531,11 +529,11 @@ documented at-scale contract (`planes_for_corpus`,
 `simhash_width_for_corpus`, and IVF cells at N/(cap/2) = N/32 for
 skew headroom per `_cell_probe_topk`).  The dd10 and sim7 rows run
 the r7 at-scale quantizer end-to-end (two-level O(√k)/row
-assignment, Arrow engine; at cells = N/32 the 64-per-centroid sample
-rule clips at the corpus, so training is full-corpus here — the
-hash-order sample knob targets fixed-k regimes — parity-pinned to the
-oracle codegen engine by `test_two_level_engine_parity`) with
-probe-side multi-assignment P=2.
+assignment, the numpy kernel that registry query sim7 checks against
+its DuckDB twin; at cells = N/32 the 64-per-centroid sample rule
+clips at the corpus, so training is full-corpus here — the
+hash-order sample knob targets fixed-k regimes) with probe-side
+multi-assignment P=2.
 
 Pair recall (operator output ∩ sample vs brute-force truth):
 
