@@ -1895,6 +1895,67 @@ def test_two_level_assignment_exact_when_coarse_covers(spark):
         assert flat == two and len(two) == n_probe * len(rows), n_probe
 
 
+def test_two_level_engine_parity(spark):
+    """The numpy (mapInPandas) two-level kernel implements the
+    assignment contract exactly — primary and multi-probe, with coarse
+    truncation ACTIVE (coarse_probe 2 of 4) — on clustered + noise
+    data.  The reference is plain Python: Σ(x−c)² per coarse and fine
+    centroid, rounded 6dp HALF_UP on the shortest decimal repr
+    (Decimal), the coarse_probe nearest coarse cells, then the n_probe
+    nearest fine members, ties by cell asc."""
+    import random as _r
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def r6(v):
+        return float(
+            Decimal(repr(float(v))).quantize(
+                Decimal("0.000001"), rounding=ROUND_HALF_UP
+            )
+        )
+
+    def d2(x, c):
+        return r6(sum((a - float(b)) ** 2 for a, b in zip(x, c)))
+
+    rng = _r.Random(21)
+    rows = []
+    vid = 0
+    for c in range(12):  # 12 loose clusters + noise rows
+        base = [rng.uniform(-1, 1) for _ in range(64)]
+        for _ in range(10):
+            rows.append(
+                (vid, [round(x + rng.uniform(-0.05, 0.05), 4) for x in base])
+            )
+            vid += 1
+    for _ in range(40):
+        rows.append((vid, [round(rng.uniform(-1, 1), 4) for _ in range(64)]))
+        vid += 1
+    emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
+    cents = similarity._kmeans_centroids(emb, 12, 1, sample_cap=100)
+    model = similarity._coarse_model(cents, 12, 64, 1)
+    coarse = list(zip(model["ccells"].tolist(), model["coarse"].tolist()))
+    groups = {
+        int(g): list(zip(gc.tolist(), gv.tolist()))
+        for g, (gc, gv) in model["groups"].items()
+    }
+    assert len(coarse) > 2  # coarse_probe=2 truncates
+    # float32 storage: the reference reads what the kernel reads
+    stored = [(r["vec_id"], r["embedding"]) for r in emb.collect()]
+    for n_probe in (1, 2):
+        want = []
+        for v, x in stored:
+            probed = sorted(coarse, key=lambda gc: (d2(x, gc[1]), gc[0]))[:2]
+            cand = [m for g, _c in probed for m in groups[g]]
+            best = sorted(cand, key=lambda m: (d2(x, m[1]), m[0]))[:n_probe]
+            want.extend((v, cell) for cell, _c in best)
+        got = sorted(
+            tuple(r)
+            for r in similarity._assign_two_level(
+                emb, model, n_probe, 2
+            ).collect()
+        )
+        assert got == sorted(want), f"kernel divergence at n_probe={n_probe}"
+
+
 def test_two_level_matches_flat_on_separated_clusters(spark):
     """With truncation ACTIVE (9 fine cells → 3 coarse, probe 2) and
     well-separated clusters, each vector's true centroid is inside its
